@@ -25,16 +25,6 @@ BUILD = ROOT / ".bench_build" / "lakebench"
 WORKLOADS = ("backfill", "churn", "read_mix")
 RUN_TIMEOUT_S = 175
 BUILD_TIMEOUT_S = 840
-# JDK 17 needs these when a SparkSession starts outside spark-submit
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
 
 
 def fail(msg):
@@ -96,7 +86,9 @@ def main():
     tmp.mkdir(parents=True, exist_ok=True)
     java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") \
         if "JAVA_HOME" in os.environ else "java"
-    opens = [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
+    # JDK 17 needs these when a SparkSession starts outside spark-submit
+    opens = [x for p in (BENCH / "add-opens.txt").read_text().split()
+             for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
     heap = json.loads((BENCH / "workloads.json").read_text())["common"]["driver_heap"]["value"]
     cmd = [java, f"-Xmx{heap}", f"-Djava.io.tmpdir={tmp}", "-XX:ReservedCodeCacheSize=512m",
            *opens, "-cp", cp, "lakebench.Main",

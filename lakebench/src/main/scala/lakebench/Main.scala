@@ -37,7 +37,7 @@ object Metrics {
     "spark.shuffle_write_bytes" -> "bytes", "spark.output_bytes" -> "bytes",
     "spark.spill_bytes" -> "bytes", "spark.parallel_efficiency" -> "ratio",
     "spark.driver_gap_s" -> "s", "jvm.gc_s" -> "s", "jvm.retained_heap_mb" -> "MB",
-    "gen.lateness_max_s" -> "s", "trace.overhead_ratio" -> "ratio", "trace.spans" -> "count")
+    "trace.overhead_ratio" -> "ratio", "trace.spans" -> "count")
 
   /** The result line: exactly the keys the benchmark contract names. */
   def resultLine(correct: Boolean, attempted: Long, failed: Long,
@@ -102,9 +102,7 @@ object Main {
         case "churn" => w.churn()
         case "read_mix" => w.readMix()
       }
-      val reps = out.setupReps
-      out.e2e("setup_s") =
-        (out.firstTimedMs - jvmStart) / 1000.0 - reps.sum + Stats.median(reps)
+      out.e2e("setup_s") = (out.firstTimedMs - jvmStart) / 1000.0
       params.describe(workload).foreach(l => println(s"param $l"))
       out.notes.foreach(n => println(s"note $n"))
       out.mismatches.foreach(m => println(s"MISMATCH $m"))

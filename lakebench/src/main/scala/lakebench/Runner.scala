@@ -86,17 +86,20 @@ final class Runner(val spark: SparkSession, val params: Params, val work: String
     new SharedMemoryStream((1 << 20) + engines, spark)
   }
 
-  /** Builds tables from a journal with one call of the engine's batch
-    * function, BatchProcessor.processBatch, as one micro-batch of one
-    * query would (set-up only: no N+1 fan-out, no streaming state).
+  /** Applies a journal to the tables in `db` with one call of the
+    * engine's batch function, BatchProcessor.processBatch, as micro-batch
+    * `batchId` of one query would (set-up only: no N+1 fan-out, no
+    * streaming state).
     */
-  def buildTables(journal: String, db: String): Unit = {
+  def applyJournal(journal: String, db: String, batchId: Long,
+                   metrics: RecordingMetrics = new RecordingMetrics): Unit = {
     val s = settings(db)
     new BatchProcessor(db, s.upkeepInterval, s.vacuumRetentionHours * 3600 * 1000,
-      deltaExport = s.deltaExport, checkpointInterval = s.deltaCheckpointInterval,
+      metrics = metrics, deltaExport = s.deltaExport,
+      checkpointInterval = s.deltaCheckpointInterval,
       optimizeWrite = Some(s.autoOptimizeOptimizeWrite),
       autoCompact = Some(s.autoOptimizeAutoCompact))
-      .processBatch(BundlePipeline.prepare(FileBundleSource.batch(spark, journal)), 0L): Unit
+      .processBatch(BundlePipeline.prepare(FileBundleSource.batch(spark, journal)), batchId): Unit
   }
 
   def wire(records: Seq[KafkaRecord]): DataFrame =

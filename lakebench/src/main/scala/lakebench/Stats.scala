@@ -57,6 +57,12 @@ object Stats {
     }
   }
 
+  /** The largest of `xs` over their mean (0 when the mean is not positive). */
+  def skew(xs: Seq[Double]): Double = {
+    val mean = if (xs.isEmpty) 0.0 else xs.sum / xs.size
+    if (mean <= 0) 0.0 else xs.max / mean
+  }
+
   /** Per tick, the slowest query's addBatch over the mean of all
     * queries' addBatch for the batches holding the tick; averaged.
     */
@@ -65,8 +71,7 @@ object Stats {
     val skews = ticks.flatMap { off =>
       val ms = queries.toSeq.flatMap(q =>
         byQuery.getOrElse(q, Seq.empty).find(_.endOffset >= off).map(_.addBatchMs.toDouble))
-      val mean = if (ms.isEmpty) 0.0 else ms.sum / ms.size
-      if (ms.size < queries.size || mean <= 0) None else Some(ms.max / mean)
+      if (ms.size < queries.size || skew(ms) <= 0) None else Some(skew(ms))
     }
     if (skews.isEmpty) 0.0 else skews.sum / skews.size
   }

@@ -18,8 +18,6 @@ final class Outcome {
   val mismatches = mutable.ArrayBuffer.empty[String]
   var attempted = 0L
   var failed = 0L
-  /** Durations of the repeated set-up step; their median enters setup_s. */
-  var setupReps: Seq[Double] = Seq.empty
   /** Epoch ms of the first timed operation. */
   var firstTimedMs = 0L
 
@@ -56,6 +54,9 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
     val f = new java.io.File(dir)
     if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
   }
+
+  private def copy(from: String, to: String): Unit =
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(from), new java.io.File(to))
 
   private def churnMix: ChurnMix = {
     val (lo, hi) = p.range("churn.bundle_entries")
@@ -113,13 +114,20 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
       "tables.recorded_upkeep_s" -> rec.upkeepS / withData)
   }
 
-  /** Per-layer numbers of a traced replay, per replayed batch (or read). */
-  private def traceLayers(tr: Tracer, unit: String, untracedS: Double): Unit = {
-    val roots = tr.named(unit)
-    val b = math.max(1, roots.size).toDouble
+  /** Per-layer numbers of a traced replay: write stages per replayed
+    * batch, read stages per read, and Spark work per root span of
+    * `sparkUnit` ("batch" or "read"). `untracedS` is the untraced time of
+    * the same batches and reads.
+    */
+  private def traceLayers(tr: Tracer, sparkUnit: String, untracedS: Double): Unit = {
+    val b = math.max(1, tr.named("batch").size).toDouble
+    val reads = math.max(1, tr.named("read").size).toDouble
     def per(name: String) = tr.total(name) / b
     def ratio(a: Double, d: Double) = if (d > 0) a / d else 0.0
+    val roots = tr.named(sparkUnit)
+    val n = math.max(1, roots.size).toDouble
     val wall = roots.map(_.durS).sum
+    val tracedS = (tr.named("batch") ++ tr.named("read")).map(_.durS).sum
     val w = roots.map(_.work)
     out.layers ++= Seq(
       "sources.batch_s" -> per("sources.batch"),
@@ -143,26 +151,26 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
         ratio(tr.sum("tables.upsert", "commit_log_bytes"), tr.sum("tables.upsert", "commits")),
       "tables.delta_log_bytes" ->
         ratio(tr.sum("tables.export", "delta_log_bytes"), tr.named("tables.export").size),
-      "tables.snapshot_resolve_s" -> per("tables.snapshot_resolve"),
-      "tables.files_scanned" -> tr.sum("tables.prune_info", "files_scanned") / b,
-      "tables.files_in_snapshot" -> tr.sum("tables.prune_info", "files_in_snapshot") / b,
-      "tables.planning_s" -> w.map(_.planningS).sum / b,
-      "spark.jobs" -> w.map(_.jobs).sum / b,
-      "spark.stages" -> w.map(_.stages).sum / b,
-      "spark.tasks" -> w.map(_.tasks).sum / b,
-      "spark.task_s" -> w.map(_.taskS).sum / b,
-      "spark.shuffle_read_bytes" -> w.map(_.shuffleRead).sum / b,
-      "spark.shuffle_write_bytes" -> w.map(_.shuffleWrite).sum / b,
-      "spark.output_bytes" -> w.map(_.output).sum / b,
-      "spark.spill_bytes" -> w.map(_.spill).sum / b,
+      "tables.snapshot_resolve_s" -> tr.total("tables.snapshot_resolve") / reads,
+      "tables.files_scanned" -> tr.sum("tables.prune_info", "files_scanned") / reads,
+      "tables.files_in_snapshot" -> tr.sum("tables.prune_info", "files_in_snapshot") / reads,
+      "tables.planning_s" -> w.map(_.planningS).sum / n,
+      "spark.jobs" -> w.map(_.jobs).sum / n,
+      "spark.stages" -> w.map(_.stages).sum / n,
+      "spark.tasks" -> w.map(_.tasks).sum / n,
+      "spark.task_s" -> w.map(_.taskS).sum / n,
+      "spark.shuffle_read_bytes" -> w.map(_.shuffleRead).sum / n,
+      "spark.shuffle_write_bytes" -> w.map(_.shuffleWrite).sum / n,
+      "spark.output_bytes" -> w.map(_.output).sum / n,
+      "spark.spill_bytes" -> w.map(_.spill).sum / n,
       "spark.parallel_efficiency" -> ratio(w.map(_.taskS).sum, wall * cores),
-      "spark.driver_gap_s" -> (wall - w.map(_.busyS).sum) / b,
-      "jvm.gc_s" -> w.map(_.gcS).sum / b,
-      "trace.overhead_ratio" -> ratio(wall, untracedS),
+      "spark.driver_gap_s" -> (wall - w.map(_.busyS).sum) / n,
+      "jvm.gc_s" -> w.map(_.gcS).sum / n,
+      "trace.overhead_ratio" -> ratio(tracedS, untracedS),
       "trace.spans" -> tr.spans.size.toDouble)
-    out.notes += f"trace: ${roots.size} $unit(s) replayed in $wall%.3f s against " +
-      f"$untracedS%.3f s untraced (overhead ratio ${ratio(wall, untracedS)}%.3f); " +
-      s"span tree in $traceOut"
+    out.notes += f"trace: ${tr.named("batch").size} batch(es) and ${tr.named("read").size} " +
+      f"read(s) replayed in $tracedS%.3f s against $untracedS%.3f s untraced " +
+      f"(overhead ratio ${ratio(tracedS, untracedS)}%.3f); span tree in $traceOut"
   }
 
   private def traced(header: Map[String, String])(body: Tracer => Unit): Tracer = {
@@ -193,29 +201,21 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
     */
   def backfill(): Outcome = {
     val work = s"${r.work}/backfill"
-    val reps = p.int("backfill.setup_reps")
-    val made = (1 to reps).map { i =>
-      time {
-        val g = new Gen(seed, p)
-        val bundles = g.backfill(p.int("backfill.entries"), minEntries, maxEntries)
-        r.writeJournal(s"$work/journal-$i", bundles, journalFiles)
-        g
-      }
-    }
-    out.setupReps = made.map(_._1)
-    val state = made.last._2.state
-    val journal = s"$work/journal-$reps"
+    val gen = new Gen(seed, p)
+    val journal = s"$work/journal"
+    r.writeJournal(journal, gen.backfill(p.int("backfill.entries"), minEntries, maxEntries),
+      journalFiles)
+    val state = gen.state
     val expected = state.live.size.toLong
     warmUp(work)
     out.firstTimedMs = System.currentTimeMillis()
     val deadline = System.nanoTime() + seconds * 1000000000L
-    val minDrains = p.int("backfill.min_drains")
-    val walls, rates = mutable.ArrayBuffer.empty[Double]
+    val walls, rates, skews = mutable.ArrayBuffer.empty[Double]
     val visible = mutable.ArrayBuffer.empty[Double]
     val progress = mutable.ArrayBuffer.empty[Progress]
     val recs = mutable.ArrayBuffer.empty[RecordingMetrics.Snapshot]
     var db = ""
-    while (walls.size < minDrains || System.nanoTime() < deadline) {
+    while (walls.isEmpty || System.nanoTime() < deadline) {
       if (db.nonEmpty) delete(db)
       db = s"$work/db-${walls.size}"
       r.progress.clear()
@@ -232,22 +232,20 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
       progress ++= ps
       recs += snap
       out.attempted += ps.size
-      // every resource becomes visible when its type's query commits
-      qs.foreach { q =>
-        val types = if (r.configured.contains(q.name)) Seq(q.name)
-          else snap.written.keys.filterNot(r.configured.contains).toSeq
-        val n = types.map(snap.written.getOrElse(_, 0L)).sum
-        val done = ps.filter(_.query == q.name).map(_.commitMs).maxOption.getOrElse(t0)
-        visible ++= Iterator.fill(n.toInt)((done - t0) / 1000.0)
-      }
+      // the resources of a query's types become visible when that query
+      // commits its last batch: one sample per query and drain
+      val perQuery = qs.map(q => ps.filter(_.query == q.name))
+      perQuery.foreach(_.map(_.commitMs).maxOption.foreach(done => visible += (done - t0) / 1000.0))
+      skews += Stats.skew(perQuery.map(_.map(_.durations.getOrElse("addBatch", 0L)).sum.toDouble))
     }
     out.e2e("throughput_per_s") = Stats.median(rates.toSeq)
-    val lat = out.timing("visible_after_drain_start", visible.toSeq)
+    val lat = out.timing("query_committed_after_drain_start", visible.toSeq)
     out.e2e("latency_p50_s") = lat.p50
     out.e2e("latency_tail_s") = lat.tail
     out.notes += s"drains=${walls.size} entries_per_drain=$expected " +
       s"drain_s=${walls.map(w => f"$w%.2f").mkString(",")}"
     streamingLayers(progress.toSeq, recs.last)
+    out.layers("streaming.fanout_skew") = Stats.median(skews.toSeq)
     finish(db, state)
 
     if (trace) {
@@ -272,9 +270,12 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
     val timedTicks = seconds * 1000 / tickMs
     val (gen, preload, ticks) = churnGen(warmTicks + timedTicks)
     r.writeJournal(s"$work/journal", preload, journalFiles)
-    val reps = p.int("churn.setup_reps")
-    out.setupReps = (1 to reps).map(i => time(r.drain(s"$work/journal", s"$work/db-$i"))._1)
-    val db = s"$work/db-1"
+    val db = s"$work/db"
+    val (build, _) = time(r.drain(s"$work/journal", db))
+    out.notes += f"set-up: table build $build%.2f s"
+    // the traced replay starts from a copy of the pre-loaded tables
+    val replayDb = s"$work/replay"
+    if (trace) copy(db, replayDb)
 
     val stream = r.memoryStream()
     val rec = new RecordingMetrics
@@ -318,15 +319,14 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
     out.attempted += ps.size
     streamingLayers(timedPs, rec.snapshot)
     out.layers("streaming.fanout_skew") = Stats.fanoutSkew(timed.map(_._1), commits, names)
-    out.layers("gen.lateness_max_s") = lateness.drop(warmTicks).max / 1000.0
+    out.notes += f"generator lateness max ${lateness.drop(warmTicks).max / 1000.0}%.3f s"
     out.notes += f"rate=${p.int("churn.rate_entries_per_s")} entries/s offered, " +
       f"${out.e2e("throughput_per_s")}%.1f committed/s; batches=${ps.size}"
     finish(db, gen.state)
 
     if (trace) {
-      // replay the Observation query's batch boundaries on the second
-      // copy of the pre-loaded tables, within a time budget
-      val replayDb = s"$work/db-$reps"
+      // replay the Observation query's batch boundaries on the copy of
+      // the pre-loaded tables, within a time budget
       val ends = commits.filter(_.query == qs(r.configured.indexOf("Observation")).name)
         .map(_.endOffset).filter(_ >= 0).distinct.sorted
       val budget = System.nanoTime() + 2L * seconds * 1000000000L
@@ -354,8 +354,10 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
 
   // ------------------------------------------------------------ read_mix
 
-  /** Closed-loop reads, with no writes, on the tables a backfill drain
-    * left. One client repeats a fixed cycle of lookups, aggregates and
+  /** Closed-loop reads, with no writes, on tables built from a backlog
+    * and then changed by a fixed prefix of churn traffic (updates,
+    * in-batch repeats, deletes), so the layout is the one live operation
+    * leaves. One client repeats a fixed cycle of lookups, aggregates and
     * joins whose targets are drawn from the seed.
     */
   def readMix(): Outcome = {
@@ -364,28 +366,43 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
     val g = new Gen(seed, p, "read_mix.type_mix")
     r.writeJournal(s"$work/journal",
       g.backfill(p.int("read_mix.table_entries"), minEntries, maxEntries), journalFiles)
+    val churnJournal = s"$work/churn-journal"
+    r.writeJournal(churnJournal, Seq.fill(p.int("read_mix.churn_entries") / tickEntries)(
+      g.churnTick(tickEntries, churnMix)).flatten, 1)
     val db = s"$work/db"
-    val (build, _) = time(r.buildTables(s"$work/journal", db))
-    out.setupReps = Seq(build)
-    out.notes += f"set-up: table build $build%.2f s"
+    val replayDb = s"$work/replay"
+    val (build, _) = time(r.applyJournal(s"$work/journal", db, 0L))
+    // the traced run replays the churn batch on the tables as they were
+    // before it
+    if (trace) copy(db, replayDb)
+    val rec = new RecordingMetrics
+    val (churnS, _) = time(r.applyJournal(churnJournal, db, 1L, rec))
+    val snap = rec.snapshot
+    out.layers ++= Seq("tables.recorded_merge_s" -> snap.mergeS,
+      "tables.recorded_delete_s" -> snap.deleteS, "tables.recorded_upkeep_s" -> snap.upkeepS)
+    out.notes += f"set-up: table build $build%.2f s, churn batch $churnS%.2f s"
     val state = g.state
     val liveByType = Seq("Observation", "Patient").map(t => t -> state.liveOf(t).toIndexedSeq).toMap
     val rnd = new SplittableRandom(seed * 31 + 7)
-    val cycle = Seq.fill(p.int("read_mix.lookups_per_cycle"))("lookup") ++
-      Seq.fill(p.int("read_mix.aggregates_per_cycle"))("aggregate") ++
-      Seq.fill(p.int("read_mix.joins_per_cycle"))("join")
-    val absentShare = p.double("read_mix.absent_lookup_share")
+    // every cycle holds the same lookups by type and by absent id, so a
+    // run's lookup median does not move with how its random draws split
+    val lookups = p.int("read_mix.lookups_per_cycle")
+    val patients = math.round(lookups * p.double("read_mix.patient_lookup_share")).toInt
+    val absent = math.round(lookups * p.double("read_mix.absent_lookup_share")).toInt
+    val cycle = Seq.tabulate(lookups)(i =>
+        (if (i < patients) "Patient" else "Observation", absent > 0 && i % (lookups / absent) == 0)) ++
+      Seq.fill(p.int("read_mix.aggregates_per_cycle"))(("aggregate", false)) ++
+      Seq.fill(p.int("read_mix.joins_per_cycle"))(("join", false))
     var n = 0
     def nextRead(): Read = {
       n += 1
       cycle((n - 1) % cycle.size) match {
-        case "lookup" =>
-          val t = if (rnd.nextDouble() < 0.7) "Observation" else "Patient"
+        case (t @ ("Observation" | "Patient"), isAbsent) =>
           val id =
-            if (rnd.nextDouble() < absentShare) f"${rnd.nextLong()}%016x"
+            if (isAbsent) f"${rnd.nextLong()}%016x"
             else liveByType(t)(rnd.nextInt(liveByType(t).size)).id
           Lookup(t, id, state.live.get(s"$t/$id"))
-        case "aggregate" =>
+        case ("aggregate", _) =>
           val st = Gen.statuses("Observation")
           Aggregate(st(rnd.nextInt(st.size)))
         case _ =>
@@ -470,8 +487,11 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
 
     if (trace) {
       val budget = System.nanoTime() + 2L * seconds * 1000000000L
-      var untraced = 0.0
+      var untraced = churnS
       traced(Map("workload" -> "read_mix", "seed" -> seed.toString)) { tr =>
+        r.replayBatch(tr, FileBundleSource.batch(spark, churnJournal), 1L, replayDb,
+          Settings().upkeepInterval, Settings().vacuumRetentionHours * 3600 * 1000)
+        out.attempted += 1
         done.iterator.zipWithIndex.takeWhile(_ => System.nanoTime() < budget).foreach { case ((op, s), i) =>
           untraced += s
           tr.span("read", i.toLong, tableOf(op)) {
@@ -487,6 +507,7 @@ final class Workloads(r: Runner, seed: Long, seconds: Int, trace: Boolean,
           }
         }
       }.pipe(tr => traceLayers(tr, "read", untraced))
+      Verify.tables(spark, replayDb, r.allTypes, state).foreach(m => out.mismatch(s"replay: $m"))
     }
     out
   }

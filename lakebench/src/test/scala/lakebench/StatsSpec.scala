@@ -26,6 +26,19 @@ class StatsSpec extends AnyFunSuite {
     assert(t.tailPct == 90.0 && t.n == 100 && t.tail == percentile((1 to 100).map(_.toDouble), 90))
   }
 
+  test("a timing of too few samples reports the median as its tail") {
+    // one commit time per fan-out query and drain: six samples
+    val t = timing(Seq(14.1, 14.9, 15.2, 15.0, 16.6, 13.8))
+    assert(t.tailPct == 50.0 && t.n == 6)
+    assert(t.tail == t.p50 && t.p50 == (14.9 + 15.0) / 2)
+  }
+
+  test("skew is the largest value over the mean") {
+    assert(skew(Seq(300.0, 100.0, 200.0)) == 1.5)
+    assert(skew(Seq(0.0, 0.0)) == 0.0)
+    assert(skew(Seq.empty) == 0.0)
+  }
+
   private def c(q: String, end: Long, commitMs: Long, addBatchMs: Long = 100) =
     Commit(q, 0, end, commitMs, addBatchMs)
 
