@@ -336,9 +336,8 @@ private[graft] object TableGates {
         tb.optimize(numFiles = 8)
         tb
       })
-      // lazy read → the StatsFileIndex + bloom-probe hook prunes at
-      // PLAN time from the pushed IN filter (read(filter)'s eager
-      // pruning is the stats-only path; this exercises the index)
+      // the StatsFileIndex + bloom-probe hook prunes at PLAN time
+      // from the pushed IN filter, where min/max stats cannot
       rt.read().filter(col("o_orderkey").isin(7L, 311L, 1202L))
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"))

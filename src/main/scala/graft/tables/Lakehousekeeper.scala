@@ -53,18 +53,11 @@ object Lakehousekeeper {
              // (A 24h default contradicted enforceRetention=true: the
              // no-argument call refused itself on every table.)
              retentionHours: Long = 168, dryRun: Boolean = false,
-             enforceRetention: Boolean = true,
-             // distributed = list+delete as Spark jobs (the 10M-file
-             // object-store shape); behavior-identical otherwise
-             distributed: Boolean = false): Seq[(String, Long)] =
+             enforceRetention: Boolean = true): Seq[(String, Int)] =
     listTables(spark, dir).map { p =>
       val t = ResourceTable(spark, p)
-      val n =
-        if (distributed)
-          t.vacuumDistributed(retentionHours * 3600 * 1000, dryRun,
-            enforceRetention = enforceRetention)
-        else t.vacuum(retentionHours * 3600 * 1000, dryRun,
-          enforceRetention).toLong
+      val n = t.vacuum(retentionHours * 3600 * 1000, dryRun,
+        enforceRetention)
       if (!dryRun) t.cleanupMetadata()
       p -> n
     }
@@ -391,7 +384,7 @@ object Lakehousekeeper {
     val dir = args.lift(1).getOrElse("/tmp/graft/delta/default")
     if (cmd == "help") {
       System.err.println(
-        "usage: lakehousekeeper vacuum <dir> [retentionHours] [dry] [no-enforce] [dist]" +
+        "usage: lakehousekeeper vacuum <dir> [retentionHours] [dry] [no-enforce]" +
           " | optimize <dir> [numFiles|<size>g|<size>m] [compression]" +
           " | compact <dir> [min<m>] | purge-dv <dir> [minDeadFraction]" +
           " | register <dir> | register-hms <dir> <thrift://h:p>" +
@@ -430,9 +423,7 @@ object Lakehousekeeper {
           val dry = flags.contains("dry") // VACUUM ... DRY RUN parity
           // --enforce-retention-duration=false analogue
           val enforce = !flags.contains("no-enforce")
-          // `dist`: run the listing + deletes as Spark jobs
-          val dist = flags.contains("dist")
-          vacuum(spark, dir, hours, dry, enforce, dist).foreach { case (p, n) =>
+          vacuum(spark, dir, hours, dry, enforce).foreach { case (p, n) =>
             println(s"vacuumed $p: $n files removed" +
               (if (dry) " (dry run)" else ""))
           }

@@ -34,7 +34,7 @@ import java.nio.charset.StandardCharsets
   * CHECK constraints, row tracking (`enableRowTracking` /
   * `readWithRowIds`), in-commit timestamps, append-only enforcement,
   * bloom file-skipping indexes, size-targeted + incremental OPTIMIZE
-  * (`optimizeBySize` / `compactSmallFiles`), distributed VACUUM, and
+  * (`optimizeBySize` / `compactSmallFiles`), and
   * idempotent-writer txn watermarks (`withTransaction` / `txnVersion`).
   *
   * Commit protocol — FILE-GRANULAR, like Delta's MERGE rewrite scope:
@@ -192,8 +192,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     // calls to plan — an explicit-path spark.read.parquet still stats
     // every file), and any filter a caller composes later prunes
     // whole files against the manifest's min/max/nullCount at plan
-    // time — the same data skipping read(filter) applies eagerly, now
-    // free on every lazily-filtered read. Legacy pre-bytes commits
+    // time (stats, plus the bloom hook below). Legacy pre-bytes commits
     // fall back to one status probe per file.
     val entries = files.map { case (rel, st) =>
       val p = fs.makeQualified(resolve(rel))
@@ -847,25 +846,39 @@ final class ResourceTable(val spark: SparkSession, val path: String,
       .drop("_i")
   }
 
-  /** Data-skipping read (Delta stats-based file pruning): files whose
-    * commit-log min/max stats prove `filter` can match no row are not
-    * even opened; the filter is re-applied row-level after the scan, so
-    * results are identical to `read().filter(filter)` — only the IO
-    * differs. With clustered optimize() (disjoint key ranges per file)
-    * a selective key predicate reads O(1) files instead of the table.
+  /** Data-skipping read: `read().filter(filter)`. The filter reaches
+    * the snapshot's [[StatsFileIndex]] as pushed data filters, so files
+    * whose manifest min/max/null stats (or bloom sidecar) prove it can
+    * match no row are never opened; the filter is re-applied row-level
+    * after the scan. With clustered optimize() (disjoint key ranges per
+    * file) a selective key predicate reads O(1) files, not the table.
     */
-  def read(filter: org.apache.spark.sql.Column): DataFrame = {
-    val (kept, _, vSchema) = pruneFilesAt(filter)
-    if (kept.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], vSchema)
-    else readFiles(kept, vSchema).filter(filter)
-  }
+  def read(filter: org.apache.spark.sql.Column): DataFrame =
+    read().filter(filter)
 
-  /** (files read, files total) for `filter` — the skipping telemetry. */
+  /** (files read, files total) for `filter` — the skipping telemetry.
+    * Lists the planned scan's own [[StatsFileIndex]] with the scan's
+    * pushed filters, so the count is what [[read]]`(filter)` opens:
+    * stats and bloom pruning both. A filter the optimizer folds to an
+    * empty relation reads nothing; an empty snapshot has no files.
+    */
   def pruneInfo(filter: org.apache.spark.sql.Column): (Int, Int) = {
-    val (kept, total, _) = pruneFilesAt(filter)
-    (kept.size, total)
+    def scanOf(df: DataFrame) = df.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.isInstanceOf[StatsFileIndex] =>
+        (s, s.relation.location.asInstanceOf[StatsFileIndex])
+    }
+    val snapshot = read()
+    scanOf(snapshot.filter(filter)) match {
+      case Some((scan, idx)) =>
+        val listed = idx.listFiles(scan.partitionFilters, scan.dataFilters)
+          .map(_.files.size).sum
+        (listed, idx.lastScanned.toInt)
+      case None => (0, scanOf(snapshot).fold(0) { case (_, idx) =>
+        idx.listFiles(Nil, Nil)
+        idx.lastScanned.toInt
+      })
+    }
   }
 
   /** DYNAMIC FILE PRUNING join (Delta's DFP, done at manifest grade):
@@ -926,49 +939,6 @@ final class ResourceTable(val spark: SparkSession, val path: String,
         .collect()(0)
       col(factKey) >= lit(mm.get(0)) && col(factKey) <= lit(mm.get(1))
     }
-  }
-
-  private def pruneFilesAt(filter: org.apache.spark.sql.Column)
-      : (Seq[(String, FileStats.FileStat)], Int, StructType) = {
-    val v = latestVersion.getOrElse(
-      throw new IllegalStateException(s"no table at $path"))
-    val files = fileListAt(v)
-    // EVERYTHING pins to version v's own schema, never a second
-    // latest-head read: a concurrent rename commit landing between the
-    // file-list resolution and a live schema() read would translate
-    // the predicate with the NEW name map against version-v stats —
-    // pruning files whose rows match under v's meaning of the column,
-    // silently dropping them from the result (readVersion pins the
-    // same way). Pre-schema-field commit bodies fall back to the head.
-    val vSchema = FileStats.schemaOf(commitBody(v))
-      .flatMap(j => scala.util.Try(
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[StructType]).toOption)
-      .getOrElse(schema())
-    // Resolve the Column against the table schema: the Column DSL
-    // builds UnresolvedFunction nodes (">=", "and", …) that only the
-    // analyzer turns into the comparison expressions stats understand.
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], vSchema)
-    val pred = empty.filter(filter).queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-    }
-    // column mapping: stats key PHYSICAL names — translate the
-    // predicate's attribute names before probing them
-    val nameMap = vSchema.fields.map(f => f.name -> physName(f)).toMap
-    val physPred = pred.map(_.transform {
-      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-          if nameMap.getOrElse(a.name, a.name) != a.name =>
-        a.withName(nameMap(a.name))
-    })
-    val kept = files.filter { case (_, st) =>
-      physPred match {
-        case Some(p) => !FileStats.canSkip(p, st)
-        case None => true // no predicate → never skip
-      }
-    }
-    (kept, files.size, vSchema)
   }
 
   // ---------------- manifest plumbing ---------------------------------
@@ -2788,8 +2758,8 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     * refused loudly, like delta-spark's replaceWhere check.
     *
     * Scale shape: files whose min/max stats PROVE they hold no
-    * matching row carry by reference (the same skipping
-    * `read(filter)` uses); only may-overlap files rewrite, keeping
+    * matching row carry by reference (the same stats skipping
+    * snapshot reads plan with); only may-overlap files rewrite, keeping
     * their non-matching survivors (predicate-null rows count as
     * non-matching, Delta's semantics). Write amplification is
     * O(files overlapping the predicate), never O(table).
@@ -3165,116 +3135,6 @@ final class ResourceTable(val spark: SparkSession, val path: String,
         !liveSidecars(s.getPath.getName) &&
         s.getModificationTime < cutoff)
       .foreach(s => if (!dryRun) fs.delete(s.getPath, false))
-  }
-
-  /** DISTRIBUTED vacuum — the same retention contract as [[vacuum]]
-    * with the listing and the deletes run as Spark jobs (Delta's
-    * parallel VACUUM shape): each snapshot directory is listed on an
-    * executor, the candidate set anti-joins the referenced-path set,
-    * and deletions run `foreachPartition`-style. On an object store
-    * the per-file RPCs ARE the cost of vacuum — serial driver-side
-    * listing of a 10M-file table is hours; distributed it is
-    * `files / parallelism`. Deletes are idempotent (a retried or
-    * speculated task re-deleting a missing file is a no-op), so task
-    * retries are safe.
-    *
-    * Driver state: the referenced REL-PATH strings (transient, no
-    * stats objects) and one status row per snapshot DIRECTORY — not
-    * per file. The same in-flight-writer retention SAFETY note as
-    * [[vacuum]] applies. Returns parquet data files removed (counted
-    * under `dryRun`).
-    */
-  def vacuumDistributed(retentionMs: Long = 24L * 3600 * 1000,
-                        dryRun: Boolean = false,
-                        listParallelism: Int = 64,
-                        enforceRetention: Boolean = false,
-                        minRetentionMs: Long = DefaultMinRetentionMs): Long = {
-    if (enforceRetention && retentionMs < minRetentionMs)
-      throw new IllegalArgumentException(
-        s"retention ${retentionMs}ms is below the minimum " +
-          s"${minRetentionMs}ms; pass enforceRetention=false to " +
-          "override (lakehousekeeper --enforce-retention-duration)")
-    val cur = latestVersion.getOrElse(return 0L)
-    val referenced = fileListAt(cur).map(_._1)
-    val refSet = referenced.toSet
-    if (!dryRun && DeltaExport.exported(this) &&
-        (DeltaExport.liveFiles(this) -- refSet).nonEmpty)
-      try DeltaExport.export(this)
-      catch { case e: IllegalStateException =>
-        throw new IllegalStateException(
-          s"$path: vacuum would reap files still live in the exported " +
-            "_delta_log, and the export could not be brought current — " +
-            "fix or remove the _delta_log directory first", e)
-      }
-    val curDir = FileStats.dirOf(commitBody(cur)).getOrElse("")
-    val cutoff = System.currentTimeMillis() - retentionMs
-    val snapDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("snap-"))
-    import spark.implicits._
-    val conf = new SerializableHadoopConf(
-      spark.sessionState.newHadoopConf())
-    val rootStr = root.toString
-    val parts = math.max(1, math.min(snapDirs.length, listParallelism))
-    val listing = spark
-      .createDataset(snapDirs.map(_.getPath.getName).toSeq)
-      .repartition(parts)
-      .mapPartitions { dirs =>
-        val f = new HPath(rootStr).getFileSystem(conf.value)
-        dirs.flatMap { d =>
-          // same vanishing-dir tolerance as the serial vacuum: a
-          // concurrent writer losing its election deletes its staged
-          // dir between the root listing and this per-dir listing
-          val entries =
-            try f.listStatus(new HPath(s"$rootStr/$d"))
-            catch { case _: java.io.FileNotFoundException =>
-              Array.empty[org.apache.hadoop.fs.FileStatus] }
-          entries.iterator
-            .filter(e => !e.isDirectory && e.getModificationTime < cutoff)
-            .map(e => (s"$d/${e.getPath.getName}", e.getPath.toString))
-        }
-      }.toDF("rel", "abs")
-    val valid = spark.createDataset(referenced).toDF("rel")
-    val doomed = listing.join(valid, Seq("rel"), "left_anti")
-    val removedParquet =
-      if (dryRun) doomed.filter($"rel".endsWith(".parquet")).count()
-      else {
-        val perPartition = doomed.select($"abs").as[String]
-          .mapPartitions { it =>
-            val f = new HPath(rootStr).getFileSystem(conf.value)
-            var parq = 0L
-            it.foreach { p =>
-              f.delete(new HPath(p), false)
-              if (p.endsWith(".parquet")) parq += 1
-            }
-            Iterator.single(parq)
-          }.collect()
-        perPartition.sum
-      }
-    if (!dryRun) {
-      // dir sweep + sidecar reap stay driver-side: O(directories) and
-      // O(sidecars) respectively, never O(files)
-      fs.listStatus(root)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("snap-"))
-        .foreach { s =>
-          if (fs.listStatus(s.getPath).isEmpty &&
-              s.getPath.getName != curDir &&
-              s.getModificationTime < cutoff)
-            fs.delete(s.getPath, true)
-        }
-      reapOrphanSidecars(cur, cutoff, dryRun)
-      reapOrphanBloomSidecars(cutoff, dryRun)
-      // commit-publish tmp orphans reap here too (serial vacuum's
-      // `.N.commit.<uuid>.tmp` sweep): a deployment that only runs the
-      // distributed variant — the 10M-file object-store shape it
-      // exists for — must not accumulate dead tmp files that inflate
-      // every _log listing forever
-      fs.listStatus(logDir)
-        .filter(s => !s.isDirectory && s.getPath.getName.startsWith(".") &&
-          s.getPath.getName.endsWith(".tmp") &&
-          s.getModificationTime < cutoff)
-        .foreach(s => fs.delete(s.getPath, false))
-    }
-    removedParquet
   }
 
   /** delta-rs `cleanup_metadata` parity (lakehousekeeper.py:163): drop
@@ -3954,9 +3814,10 @@ object ResourceTable {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Pure merge semantics (J1) as a standalone transformation, used both
-    * by `upsert` and directly by the q_merge_upsert gate query: rows of
-    * `target` not keyed in `source`, plus all of `source`.
+  /** Pure merge semantics (J1) as a standalone transformation, used by
+    * the q_merge_upsert gate query (`upsert` runs its own file-granular
+    * merge): rows of `target` not keyed in `source`, plus all of
+    * `source`.
     */
   def mergeUpsert(target: DataFrame, source: DataFrame, key: String): DataFrame =
     target.join(source.select(key), Seq(key), "left_anti")

@@ -64,6 +64,15 @@ class BloomIndexSpec extends SparkSpec {
       s"bloom pruned nothing: materialized ${idx.lastMaterialized}")
   }
 
+  test("pruneInfo and read(filter) report the bloom-pruned scan") {
+    val rt = freshTable(tmpDir("bloomspec_info"))
+    val (kept, total) = rt.pruneInfo(col("k") === 311L)
+    assert(total == 8 && kept < 8, s"pruneInfo kept $kept of $total")
+    val lookup = rt.read(col("k") === 311L)
+    assert(lookup.collect().map(_.getLong(0)).toSeq == Seq(311L))
+    assert(statsIndexOf(lookup).lastMaterialized == kept)
+  }
+
   test("IN lookup keeps exactly the union of matching files; string column works") {
     val rt = freshTable(tmpDir("bloomspec_in"))
     val in = rt.read().filter(col("tag").isin("tag5", "tag443", "nope"))

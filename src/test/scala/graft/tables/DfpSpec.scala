@@ -76,6 +76,9 @@ class DfpSpec extends SparkSpec {
   test("empty dim yields an empty inner join") {
     val rt = fact(tmpDir("dfp3"), n = 100)
     assert(rt.joinPruned(dimOf(Seq.empty), "fk", "dk").count() == 0)
+    // the fact filter folds to an empty relation: no file is read
+    val (kept, total) = rt.joinPrunedInfo(dimOf(Seq.empty), "fk", "dk")
+    assert(kept == 0 && total > 0, s"$kept/$total")
     // all-null dim keys are the same: no key can match
     import spark.implicits._
     val nullDim = Seq((Option.empty[Long], "x")).toDF("dk", "dname")
