@@ -38,8 +38,8 @@ import scala.jdk.CollectionConverters._
   * commits with a `_last_checkpoint` pointer (PROTOCOL.md
   * "Checkpoints"), so readers replay checkpoint + tail instead of
   * the whole log. Tables that use the richer features export them
-  * too, with the protocol auto-upgraded to exactly the feature set in
-  * use (reader 3 / writer 7 table features, emitted below): deletion
+  * too, with the protocol upgraded to the feature set in use and
+  * never narrowed (reader 3 / writer 7 table features): deletion
   * vectors, column mapping, change data feed (`cdc` actions), type
   * widening, TIMESTAMP_NTZ, in-commit timestamps, row tracking +
   * domain metadata, generated/identity/default columns, check
@@ -161,156 +161,86 @@ object DeltaExport {
     wrap("commitInfo", ci)
   }
 
-  private def protocol(needDv: Boolean = false,
-                       needCdf: Boolean = false,
-                       needMapping: Boolean = false,
-                       needGen: Boolean = false,
-                       needIdentity: Boolean = false,
-                       needConstraints: Boolean = false,
-                       needRowTracking: Boolean = false,
-                       needWidening: Boolean = false,
-                       needDefaults: Boolean = false,
-                       needClustering: Boolean = false,
-                       needIct: Boolean = false,
-                       needNtz: Boolean = false,
-                       needAppendOnly: Boolean = false): ObjectNode = {
+  /** Features with a legacy carrier: the (minReader, minWriter) pair
+    * that implies each (PROTOCOL.md feature-by-version table).
+    */
+  private val LegacyFeatures: Map[String, (Int, Int)] = Map(
+    "appendOnly" -> (1, 2), "invariants" -> (1, 2),
+    "checkConstraints" -> (1, 3), "changeDataFeed" -> (1, 4),
+    "generatedColumns" -> (1, 4), "columnMapping" -> (2, 5),
+    "identityColumns" -> (1, 6))
+
+  /** Reader-visible features, in listing order: files narrower than
+    * the schema (typeWidening), a TIMESTAMP_NTZ an unaware reader
+    * would treat as session-zoned, physical column names, the V2
+    * checkpoint layout. Each is listed on both lists.
+    */
+  private val ReaderFeatures = Seq("deletionVectors", "typeWidening",
+    "timestampNtz", "columnMapping", "v2Checkpoint")
+
+  private val FeatureOrder = ReaderFeatures ++ Seq("changeDataFeed",
+    "generatedColumns", "identityColumns", "checkConstraints",
+    "rowTracking", "domainMetadata", "allowColumnDefaults",
+    "appendOnly", "invariants", "inCommitTimestamp", "clustering")
+
+  /** The protocol action declaring `features`. A set every feature of
+    * which has a legacy carrier renders as the lowest legacy version
+    * pair, so a plain table stays at (1,2) for the oldest readers.
+    * Anything else takes the table-features form (PROTOCOL.md "Table
+    * Features"): writer 7 enforces ONLY the features it lists, so
+    * writerFeatures names every one, legacy ones included (an
+    * append-only table that omits appendOnly there lets foreign
+    * writers remove data). readerFeatures exists at reader 3 only,
+    * and then lists every reader-visible feature — a mapped table
+    * forced to reader 3 by timestampNtz alone still declares
+    * columnMapping, or spec-strict readers skip the mapping. Column
+    * mapping alone keeps reader 2.
+    */
+  private def protocol(features: Set[String]): ObjectNode = {
     val p = f.objectNode()
-    if (needDv || needRowTracking || needWidening || needDefaults ||
-        needClustering || needIct || needNtz) {
-      // deletion vectors are a table FEATURE (PROTOCOL.md "Table
-      // Features"): reader 3 / writer 7 with the feature named on
-      // both lists — exactly what delta-spark writes when DVs enable.
-      // changeDataFeed is WRITER-only (CDF-unaware readers may ignore
-      // _change_data), so it joins writerFeatures alone. Column
-      // mapping is reader-visible and joins both lists. Row tracking
-      // is writer-only too and has no legacy carrier at all, so it
-      // forces this branch; writer 7 lists EVERY active feature
-      // explicitly (legacy version implications don't apply).
-      if (needDv || needWidening || needNtz) p.put("minReaderVersion", 3)
-      else p.put("minReaderVersion", if (needMapping) 2 else 1)
-      p.put("minWriterVersion", 7)
-      val rf = f.arrayNode()
-      val wf = f.arrayNode()
-      if (needDv) { rf.add("deletionVectors"); wf.add("deletionVectors") }
-      // typeWidening is reader-visible: files narrower than the schema
-      // require readers that upcast on scan (PROTOCOL.md Type Widening)
-      if (needWidening) { rf.add("typeWidening"); wf.add("typeWidening") }
-      // TIMESTAMP_NTZ is reader-visible: an unaware reader would treat
-      // the column as session-zoned (PROTOCOL.md timestampNtz)
-      if (needNtz) { rf.add("timestampNtz"); wf.add("timestampNtz") }
-      if (needMapping) {
-        // whenever readerFeatures is emitted at all (reader 3), every
-        // active reader-visible feature must be ON the list — a mapped
-        // table forced to reader 3 by timestampNtz alone still needs
-        // columnMapping declared, or spec-strict readers skip mapping
-        if (needDv || needWidening || needNtz) rf.add("columnMapping")
-        wf.add("columnMapping")
-      }
-      if (needCdf) wf.add("changeDataFeed")
-      // writer-only features: readers ignore generation/identity
-      // metadata, and unaware writers are fenced off constraints
-      if (needGen) wf.add("generatedColumns")
-      if (needIdentity) wf.add("identityColumns")
-      if (needConstraints) wf.add("checkConstraints")
-      if (needRowTracking) {
-        wf.add("rowTracking")
-        wf.add("domainMetadata") // rowTracking's declared dependency
-      }
-      // DEFAULTs fence off unaware writers (they would insert NULL
-      // where the default belongs); readers are unaffected
-      if (needDefaults) wf.add("allowColumnDefaults")
-      // writer 7 enforces ONLY the features it lists — appendOnly's
-      // legacy writer-2 carrier does not apply here, so an append-only
-      // table on the table-features form must name the feature or
-      // spec-compliant foreign writers stop enforcing it
-      if (needAppendOnly) wf.add("appendOnly")
-      // ICT is writer-only and has NO legacy carrier — any table
-      // declaring it must be on the table-features protocol form
-      if (needIct) wf.add("inCommitTimestamp")
-      if (needClustering) {
-        wf.add("clustering")
-        // clustering state rides domainMetadata (delta.clustering);
-        // don't re-add if rowTracking already declared the dependency
-        if (!needRowTracking) wf.add("domainMetadata")
-      }
-      if (needDv || needWidening || needNtz)
-        p.replace("readerFeatures", rf)
-      p.replace("writerFeatures", wf)
-    } else if (needMapping) {
-      // legacy carrier for column mapping: reader 2 / writer 5
-      // (PROTOCOL.md "Column Mapping"; writer 5 ≥ the CDF minimum 4
-      // and the constraints minimum 3). Identity needs legacy writer
-      // 6, which subsumes 5.
-      p.put("minReaderVersion", 2)
-      p.put("minWriterVersion", if (needIdentity) 6 else 5)
+    if (features.forall(LegacyFeatures.contains)) {
+      val carriers = features.toSeq.map(LegacyFeatures)
+      p.put("minReaderVersion", (1 +: carriers.map(_._1)).max)
+      p.put("minWriterVersion", (2 +: carriers.map(_._2)).max)
     } else {
-      p.put("minReaderVersion", 1)
-      // legacy writer version 6 carries identity columns; 4 carries
-      // BOTH change data feed and generated columns; 3 carries CHECK
-      // constraints (PROTOCOL.md feature-by-version table)
-      p.put("minWriterVersion",
-        if (needIdentity) 6
-        else if (needCdf || needGen) 4
-        else if (needConstraints) 3
-        else 2)
+      val rf = ReaderFeatures.filter(features)
+      val reader3 = rf.exists(_ != "columnMapping")
+      p.put("minReaderVersion",
+        if (reader3) 3 else if (rf.nonEmpty) 2 else 1)
+      p.put("minWriterVersion", 7)
+      def list(fs: Seq[String]) = {
+        val a = f.arrayNode(); fs.foreach(a.add); a
+      }
+      if (reader3) p.replace("readerFeatures", list(rf))
+      p.replace("writerFeatures", list(FeatureOrder.filter(features) ++
+        (features -- FeatureOrder).toSeq.sorted))
     }
     wrap("protocol", p)
   }
 
-  /** True when the (graft) schema json carries column-mapping field
-    * metadata — the export must then speak Delta name mode.
+  /** The feature set a protocol action declares or implies: the listed
+    * features on the table-features form, else every legacy feature
+    * its version pair carries.
     */
-  private[tables] def isMapped(schemaJson: String): Boolean =
-    scala.util.Try(DataType.fromJson(schemaJson)
-        .asInstanceOf[StructType].fields
-        .exists(_.metadata.contains(ResourceTable.PhysKey)))
-      .getOrElse(false)
-
-  /** Whether the schema holds a TIMESTAMP_NTZ anywhere (nested types
-    * included): the delta protocol gates the type behind the
-    * `timestampNtz` reader+writer feature — a reader unaware of it
-    * would misread the column as a session-zoned timestamp.
-    */
-  private[tables] def hasNtz(schemaJson: String): Boolean =
-    scala.util.Try {
-      def scan(dt: DataType): Boolean = dt match {
-        case s: StructType => s.fields.exists(f => scan(f.dataType))
-        case a: ArrayType => scan(a.elementType)
-        case m: MapType => scan(m.keyType) || scan(m.valueType)
-        case TimestampNTZType => true
-        case _ => false
-      }
-      scan(DataType.fromJson(schemaJson))
-    }.getOrElse(false)
-
-  /** A schema that carries any `delta.typeChanges` field metadata was
-    * type-widened: files narrower than the schema exist, so the
-    * protocol must demand the typeWidening reader feature.
-    */
-  private[tables] def isWidened(schemaJson: String): Boolean =
-    scala.util.Try(DataType.fromJson(schemaJson)
-        .asInstanceOf[StructType].fields
-        .exists(_.metadata.contains("delta.typeChanges")))
-      .getOrElse(false)
-
-  /** A schema carrying any `CURRENT_DEFAULT` field metadata has
-    * column defaults: unaware writers must be fenced off
-    * (allowColumnDefaults writer feature).
-    */
-  private[tables] def isDefaulted(schemaJson: String): Boolean =
-    scala.util.Try(DataType.fromJson(schemaJson)
-        .asInstanceOf[StructType].fields
-        .exists(_.metadata.contains(ResourceTable.DefaultKey)))
-      .getOrElse(false)
+  private def featuresOf(p: JsonNode): Set[String] = {
+    val r = p.get("minReaderVersion").asInt
+    val w = p.get("minWriterVersion").asInt
+    def listed(k: String) =
+      Option(p.get(k)).toSeq.flatMap(_.asScala.map(_.asText))
+    if (w >= 7) (listed("readerFeatures") ++ listed("writerFeatures")).toSet
+    else LegacyFeatures.collect {
+      case (n, (fr, fw)) if r >= fr && w >= fw => n
+    }.toSet
+  }
 
   /** The graft mapping metadata translated to Delta's
     * `delta.columnMapping.physicalName`/`.id` field keys; returns the
     * delta-ready schema json plus the max column id for the
-    * `delta.columnMapping.maxColumnId` table property.
+    * `delta.columnMapping.maxColumnId` table property. `st` is
+    * `schemaJson` parsed.
     */
-  private def deltaSchemaJson(schemaJson: String)
+  private def deltaSchemaJson(schemaJson: String, st: StructType)
       : (String, Option[Long]) = {
-    val st = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     if (!st.fields.exists(_.metadata.contains(ResourceTable.PhysKey)))
       (schemaJson, None)
     else {
@@ -341,18 +271,20 @@ object DeltaExport {
     }
   }
 
-  private def metaData(t: ResourceTable, p: Pinned,
-                       schemaJson: String,
-                       ts: Long,
-                       ictEnablement: Option[(Long, Long)] = None)
-      : ObjectNode = {
+  /** The metaData action's body for `schemaJson` (parsed: `st`)
+    * under the pinned table properties, without `createdTime` (stamped
+    * when an entry restates it) and without ICT enablement provenance
+    * (which depends on the exported log, see [[restate]]).
+    */
+  private def metaData(t: ResourceTable, p: Pinned, schemaJson: String,
+                       st: StructType): ObjectNode = {
     val m = f.objectNode()
     m.put("id", tableId(t))
     val fmt = f.objectNode()
     fmt.put("provider", "parquet")
     fmt.set("options", f.objectNode())
     m.set("format", fmt)
-    val (deltaJson0, maxColId) = deltaSchemaJson(schemaJson)
+    val (deltaJson0, maxColId) = deltaSchemaJson(schemaJson, st)
     // GENERATED ALWAYS AS: delta-spark stores the SQL text as field
     // metadata `delta.generationExpression` (PROTOCOL.md "Generated
     // Columns"); aware writers enforce/compute, readers ignore it
@@ -409,26 +341,12 @@ object DeltaExport {
     }
     if (p.rowTracking)
       conf.put("delta.enableRowTracking", "true")
-    // appendOnly rides legacy writer 2 (every protocol this export
-    // emits already satisfies it) — property only
     if (p.appendOnly)
       conf.put("delta.appendOnly", "true")
-    if (p.ict) {
-      conf.put("delta.enableInCommitTimestamps", "true")
-      // a table that turned ICT on AFTER its first export records the
-      // provenance (PROTOCOL.md: commits before the enablement version
-      // resolve timestampAsOf by file timestamp, after it by
-      // inCommitTimestamp); enabled-at-anchor logs omit both — ICT
-      // covers their whole history
-      ictEnablement.foreach { case (v, ictTs) =>
-        conf.put("delta.inCommitTimestampEnablementVersion", v.toString)
-        conf.put("delta.inCommitTimestampEnablementTimestamp",
-          ictTs.toString)
-      }
-    }
+    if (p.ict)
+      conf.put(IctKey, "true")
     m.set("configuration", conf)
-    m.put("createdTime", ts)
-    wrap("metaData", m)
+    m
   }
 
   /** Row-tracking high-water-mark domain metadata (PROTOCOL.md
@@ -452,16 +370,13 @@ object DeltaExport {
         wrap("domainMetadata", d)
       }
 
-  /** Liquid-clustering state: domain `delta.clustering` carrying the
-    * clustering column PHYSICAL-name paths (delta-spark's
-    * ClusteringMetadataDomain shape) — aware writers keep clustering
-    * on these columns, readers ignore the domain. Emitted on anchor
-    * commits only: graft's clusterBy is table-level state, and domain
-    * replay is latest-wins, so one statement per log suffices.
-    */
-  /** The `delta.clustering` domainMetadata action. Physical names
+  /** Liquid-clustering state: the `delta.clustering` domainMetadata
+    * action carrying the clustering column PHYSICAL-name paths
+    * (delta-spark's ClusteringMetadataDomain shape) — aware writers
+    * keep clustering on these columns, readers ignore the domain.
+    * Emitted by anchors, re-anchors and checkpoints. Physical names
     * resolve against an EXPLICIT schema (the one the surrounding
-    * commit/checkpoint also states), so a concurrent schema change
+    * entry or checkpoint also states), so a concurrent schema change
     * can't make the domain and its metaData row disagree inside one
     * entry.
     */
@@ -739,8 +654,8 @@ object DeltaExport {
     * manifest's recorded bytes, so no data-file IO (the [[sizes]]
     * fallback lists only legacy pre-bytes entries). metadata/protocol
     * are omitted, the legacy-crc shape delta-spark explicitly
-    * tolerates — restating them here would mean re-deriving the log's
-    * newest protocol per commit for no validation gain. Best-effort by
+    * tolerates — restating them here would add bytes to every commit
+    * for no validation gain. Best-effort by
     * design: the crc is a hint, never load-bearing — a failed write
     * must not fail the already-published export entry (delta treats
     * its own crc the same way).
@@ -842,14 +757,18 @@ object DeltaExport {
     readSnapshot(spark, tablePath,
       versionAtTimestamp(spark, tablePath, tsMs))
 
-  /** The graft version a delta entry mirrors (from its commitInfo). */
-  private def graftVersionOf(t: ResourceTable, deltaV: Long): Long = {
-    val in = t.fs.open(entryFile(t, deltaV))
+  /** The non-empty action lines of json entry `v`. */
+  private def entryLines(t: ResourceTable, v: Long): Iterator[String] = {
+    val in = t.fs.open(entryFile(t, v))
     val body =
-      try new String(
-        in.readAllBytes(), StandardCharsets.UTF_8)
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
       finally in.close()
-    body.linesIterator.map(mapper.readTree)
+    body.linesIterator.filter(_.nonEmpty)
+  }
+
+  /** The graft version a delta entry mirrors (from its commitInfo). */
+  private def graftVersionOf(t: ResourceTable, deltaV: Long): Long =
+    entryLines(t, deltaV).map(mapper.readTree)
       .flatMap(n => Option(n.get("commitInfo")))
       .flatMap(n => Option(n.get("graftVersion")))
       .map(_.asLong)
@@ -857,7 +776,6 @@ object DeltaExport {
       .getOrElse(throw new IllegalStateException(
         s"${t.path}: delta log entry $deltaV has no graft commitInfo — " +
           "not written by DeltaExport; refusing to extend a foreign log"))
-  }
 
   /** Mirror every graft commit since the last export into
     * `_delta_log/`; first export anchors delta version 0 at the
@@ -865,6 +783,17 @@ object DeltaExport {
     * external readers want the data, not the archaeology). Returns the
     * latest delta version. Idempotent: nothing new to export → no
     * writes.
+    *
+    * Every entry states the table's Delta state at the graft version
+    * it mirrors — one derivation ([[deltaState]]) for the anchor, the
+    * re-anchor, each incremental entry and the checkpoint — and
+    * restates the protocol or the metaData only when that state
+    * differs from the newest one the exported log already declares
+    * ([[restate]]): the protocol as its union with the declared one
+    * (it never narrows), the metaData when any of its fields but
+    * `createdTime` changed (schema, properties, identity high-water
+    * marks). A property set after the first export thereby reaches the
+    * log with the next exported commit.
     *
     * Safe under CONCURRENT exporters: entries publish by atomic
     * rename, a lost race surfaces as [[ExportConflictException]], and
@@ -880,26 +809,6 @@ object DeltaExport {
       exportOnce(t)
     }
 
-  /** The newest protocol action visible in the exported json log, as
-    * the checkpoint's (minReader, minWriter, readerFeatures,
-    * writerFeatures) row. Replay takes the NEWEST protocol, so the
-    * checkpoint must restate it verbatim — re-deriving from current
-    * table state could silently downgrade a contract the json side
-    * already declared (the bug class: typeWidening/defaults/clustering
-    * present in json, absent from a fresh derivation).
-    */
-  private def newestExportedProtocolRow(t: ResourceTable): Option[Row] =
-    listEntries(t).reverseIterator.flatMap { v =>
-      val in = t.fs.open(entryFile(t, v))
-      val body =
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      body.linesIterator.filter(_.nonEmpty).map(mapper.readTree)
-        .flatMap(n => Option(n.get("protocol")))
-        .map(protoNodeRow)
-        .toSeq.lastOption
-    }.nextOption()
-
   private def protoNodeRow(p: JsonNode): Row = {
     def feats(k: String): Seq[String] =
       Option(p.get(k))
@@ -909,45 +818,132 @@ object DeltaExport {
       feats("readerFeatures"), feats("writerFeatures"))
   }
 
-  /** The exported log's newest VISIBLE metaData action's ICT state:
-    * whether `delta.enableInCommitTimestamps` is declared, and — when a
-    * mid-log upgrade stamped them — the enablement-provenance
-    * properties (version, timestamp). Drives both the mid-log ICT
-    * upgrade (a table that enables ICT after its first export must
-    * re-state metaData with the provenance) AND provenance
-    * carry-forward: any LATER metaData restatement (schema change,
-    * re-anchor) must repeat the properties, or foreign readers assume
-    * ICT covers the whole history and mis-resolve timestampAsOf on the
-    * pre-upgrade tail. None when no metaData action survives in the
-    * json tail (checkpoint-only history) — the caller then re-states
-    * to be safe; an extra metaData restating identical state is
-    * replay-neutral.
+  private val IctKey = "delta.enableInCommitTimestamps"
+  private val IctVersionKey = "delta.inCommitTimestampEnablementVersion"
+  private val IctTimestampKey =
+    "delta.inCommitTimestampEnablementTimestamp"
+
+  /** A table's Delta state: the protocol as the feature set it
+    * declares, and the metaData action's body.
     */
-  private def exportedIctState(t: ResourceTable, entries: Seq[Long])
-      : Option[(Boolean, Option[(Long, Long)])] =
-    entries.reverseIterator.flatMap { v =>
-      val in = t.fs.open(entryFile(t, v))
-      val body =
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      body.linesIterator.filter(_.nonEmpty).map(mapper.readTree)
-        .flatMap(n => Option(n.get("metaData")))
-        .map { m =>
-          val conf = Option(m.get("configuration"))
-          val declared = conf
-            .exists(c => Option(c.get("delta.enableInCommitTimestamps"))
-              .exists(_.asText == "true"))
-          val enablement = for {
-            c <- conf
-            v <- Option(
-              c.get("delta.inCommitTimestampEnablementVersion"))
-            ts <- Option(
-              c.get("delta.inCommitTimestampEnablementTimestamp"))
-          } yield (v.asText.toLong, ts.asText.toLong)
-          (declared, enablement)
-        }
-        .toSeq.lastOption
-    }.nextOption()
+  private final case class DeltaState(features: Set[String],
+                                      meta: JsonNode) {
+    /** The protocol action declaring [[features]]. */
+    def protocolAction: ObjectNode = protocol(features)
+  }
+
+  /** The newest protocol features and metaData the exported json log
+    * declares; None where no surviving entry holds that action.
+    */
+  private final case class Declared(features: Option[Set[String]],
+                                    meta: Option[JsonNode])
+
+  /** The table's Delta state at a graft version with schema
+    * `schemaJson` and live `files`. Deletion vectors count once
+    * enabled, before the first one exists: delta-spark upgrades the
+    * protocol at enablement. Row tracking and clustering state ride
+    * domain metadata, hence its dependency feature. The schema's own
+    * features come from its field metadata — graft's column-mapping
+    * keys (Delta name mode), `delta.typeChanges` (type-widened, so
+    * files narrower than the schema exist), `CURRENT_DEFAULT` (column
+    * defaults) — and from a TIMESTAMP_NTZ at any nesting depth.
+    */
+  private def deltaState(t: ResourceTable, p: Pinned, schemaJson: String,
+                         files: Seq[(String, FileStats.FileStat)])
+      : DeltaState = {
+    val st = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    def carry(key: String) = st.fields.exists(_.metadata.contains(key))
+    def ntz(dt: DataType): Boolean = dt match {
+      case s: StructType => s.fields.exists(fd => ntz(fd.dataType))
+      case a: ArrayType => ntz(a.elementType)
+      case m: MapType => ntz(m.keyType) || ntz(m.valueType)
+      case other => other == TimestampNTZType
+    }
+    def when(on: Boolean, fs: String*) = if (on) fs else Nil
+    DeltaState((
+      when(p.dvEnabled || files.exists(_._2.dv.isDefined),
+        "deletionVectors") ++
+      when(p.cdf, "changeDataFeed") ++
+      when(carry(ResourceTable.PhysKey), "columnMapping") ++
+      when(p.gens.nonEmpty, "generatedColumns") ++
+      when(p.idents.nonEmpty, "identityColumns") ++
+      when(p.constraints.nonEmpty, "checkConstraints") ++
+      when(p.rowTracking, "rowTracking", "domainMetadata") ++
+      when(carry("delta.typeChanges"), "typeWidening") ++
+      when(carry(ResourceTable.DefaultKey), "allowColumnDefaults") ++
+      when(p.clusterBy.nonEmpty, "clustering", "domainMetadata") ++
+      when(p.ict, "inCommitTimestamp") ++
+      when(ntz(st), "timestampNtz") ++
+      when(p.appendOnly, "appendOnly")).toSet,
+      metaData(t, p, schemaJson, st))
+  }
+
+  /** What the exported json log declares last: one newest-first scan
+    * that stops once it holds both a protocol and a metaData action.
+    * Only lines that begin with either action are parsed.
+    */
+  private def declaredIn(t: ResourceTable, entries: Seq[Long]): Declared = {
+    var d = Declared(None, None)
+    val it = entries.reverseIterator
+    while ((d.features.isEmpty || d.meta.isEmpty) && it.hasNext) {
+      val acts = entryLines(t, it.next())
+        .filter(l => l.startsWith("{\"protocol\"") ||
+          l.startsWith("{\"metaData\""))
+        .map(mapper.readTree).toSeq
+      def newest(kind: String) =
+        acts.flatMap(n => Option(n.get(kind))).lastOption
+      d = Declared(d.features.orElse(newest("protocol").map(featuresOf)),
+        d.meta.orElse(newest("metaData")))
+    }
+    d
+  }
+
+  /** The protocol and metaData actions the entry at delta version `v`
+    * (commit time `ts`) must carry so the log declares `state`, plus
+    * what the log declares after it. An action is restated only when
+    * it differs from the declared one — always when that is unknown:
+    *   - protocol: the union of the derived and the declared features,
+    *     so the protocol never narrows;
+    *   - metaData: compared without `createdTime`. A table with ICT on
+    *     whose log does not declare it yet stamps this entry as the
+    *     enablement point (PROTOCOL.md "In-Commit Timestamps": commits
+    *     before it resolve timestampAsOf by file time); the anchor
+    *     (v = 0) needs no provenance, as ICT covers the whole log.
+    *     Once stamped, the provenance is carried by every later
+    *     restatement, or the pre-enablement commits would be read
+    *     under ICT rules.
+    */
+  private def restate(state: DeltaState, declared: Declared, v: Long,
+                      ts: Long): (Seq[ObjectNode], DeltaState) = {
+    val union = state.copy(features =
+      state.features ++ declared.features.getOrElse(Set.empty))
+    val meta = state.meta.deepCopy[ObjectNode]()
+    val conf = meta.get("configuration").asInstanceOf[ObjectNode]
+    if (conf.has(IctKey)) {
+      val prior = declared.meta.map(_.get("configuration"))
+      val provenance =
+        if (prior.exists(c => c.path(IctKey).asText == "true"))
+          prior.flatMap(c => Option(c.get(IctVersionKey))
+            .zip(Option(c.get(IctTimestampKey))))
+            .map { case (pv, pts) => (pv.asText, pts.asText) }
+        else if (v == 0) None
+        else Some((v.toString, ts.toString))
+      provenance.foreach { case (pv, pts) =>
+        conf.put(IctVersionKey, pv)
+        conf.put(IctTimestampKey, pts)
+      }
+    }
+    val sameMeta = declared.meta.filter { m =>
+      val c = m.deepCopy[ObjectNode](); c.remove("createdTime")
+      c == meta
+    }
+    if (sameMeta.isEmpty) meta.put("createdTime", ts)
+    val proto = union.protocolAction
+    ((if (declared.features.contains(union.features)) Nil else Seq(proto)) ++
+      (if (sameMeta.isEmpty) Seq(wrap("metaData", meta)) else Nil),
+      DeltaState(featuresOf(proto.get("protocol")),
+        sameMeta.getOrElse(meta)))
+  }
 
   /** Protocol/domain inputs pinned ONCE per export run (r16 ADVICE):
     * exportOnce pins the schema to the replayed head, and these
@@ -996,129 +992,69 @@ object DeltaExport {
     def ict(ts: Long): Option[Long] =
       if (p.ict) Some(ts) else None
     val entries = listEntries(t)
-    if (entries.isEmpty) {
-      // a checkpoint with no json entries would make a fresh anchor at
-      // v0 INVISIBLE to checkpoint-aware readers (they replay ckpt +
-      // entries after it) — refuse rather than silently export stale
-      if (t.fs.exists(new HPath(deltaDir(t), "_last_checkpoint")))
-        throw new IllegalStateException(
-          s"${t.path}: _delta_log has a checkpoint but no json " +
-            "entries; cannot determine export state — remove the " +
-            "_delta_log directory and re-export")
-      val ts = commitTs(t, latest)
-      val files = t.fileListAt(latest)
-      val sz = sizes(t, files)
-      val types = typesAt(t, latest)
-      writeEntry(t, 0L,
-        commitInfo(latest, ts, "GRAFT EXPORT ANCHOR", ict = ict(ts)) +:
-          protocol(
-            // dvEnabled counts even with no DV yet: delta-spark
-            // upgrades the protocol at ENABLEMENT, and the re-anchor/
-            // incremental paths already export that way
-            needDv = files.exists(_._2.dv.isDefined) || p.dvEnabled,
-            needCdf = p.cdf,
-            needMapping = isMapped(schemaAtLatest),
-            needGen = p.gens.nonEmpty,
-            needIdentity = p.idents.nonEmpty,
-            needConstraints = p.constraints.nonEmpty,
-            needRowTracking = p.rowTracking,
-            needWidening = isWidened(schemaAtLatest),
-            needDefaults = isDefaulted(schemaAtLatest),
-            needClustering = p.clusterBy.nonEmpty,
-            needIct = p.ict,
-            needNtz = hasNtz(schemaAtLatest),
-            needAppendOnly = p.appendOnly) +:
-          metaData(t, p, schemaAtLatest, ts) +:
-          (rowTrackingDomain(t, p, latest) ++
-            clusteringDomain(p, schemaAtLatest) ++
-            txnDelta(Map.empty,
-            FileStats.txnsOf(t.commitBody(latest)), ts) ++
-            files.map { case (r, st) => add(r, st, sz(r), ts, types) }))
-      writeCrc(t, p, 0L, files, ts)
-      return 0L
-    }
-    val lastDelta = entries.last
-    var lastG = graftVersionOf(t, lastDelta)
+    // a checkpoint with no json entries would make a fresh anchor at
+    // v0 INVISIBLE to checkpoint-aware readers (they replay ckpt +
+    // entries after it) — refuse rather than silently export stale
+    if (entries.isEmpty &&
+        t.fs.exists(new HPath(deltaDir(t), "_last_checkpoint")))
+      throw new IllegalStateException(
+        s"${t.path}: _delta_log has a checkpoint but no json " +
+          "entries; cannot determine export state — remove the " +
+          "_delta_log directory and re-export")
+    val lastDelta = entries.lastOption.getOrElse(-1L)
+    val lastG = if (entries.isEmpty) -1L else graftVersionOf(t, lastDelta)
     if (lastG > latest)
       throw new IllegalStateException(
         s"${t.path}: delta log is ahead of the table (graft $lastG > " +
           s"$latest) — was the table restored under an exported log? " +
           "Export to a fresh copy instead")
-    var dv = lastDelta
-    // trimmed chain → ONE re-anchor commit (remove all, add current).
-    // The range starts AT lastG, not after it: the incremental loop
-    // diffs against lastG's own manifest (fileListAt(lastG)), so a
-    // trim that removed exactly up to the last-exported commit must
-    // re-anchor too, not crash the diff
-    if ((lastG to latest).exists(g => !t.versionExists(g))) {
+    if (lastG == latest) return lastDelta
+    var declared = declaredIn(t, entries)
+    // one entry `v` mirroring graft version `g`: commitInfo, then the
+    // restated protocol/metaData, then `body`
+    def publish(v: Long, g: Long, ts: Long, op: String,
+                metrics: Option[(Int, Int, Long)], schemaJson: String,
+                files: Seq[(String, FileStats.FileStat)])(
+        body: Seq[ObjectNode]): DeltaState = {
+      val (decl, now) =
+        restate(deltaState(t, p, schemaJson, files), declared, v, ts)
+      writeEntry(t, v, commitInfo(g, ts, op, metrics, ict(ts)) +:
+        (decl ++ body))
+      writeCrc(t, p, v, files, ts)
+      declared = Declared(Some(now.features), Some(now.meta))
+      now
+    }
+    // no log yet → the anchor; trimmed chain → ONE re-anchor commit
+    // (remove all, add current). The range starts AT lastG, not after
+    // it: the incremental loop diffs against lastG's own manifest
+    // (fileListAt(lastG)), so a trim that removed exactly up to the
+    // last-exported commit must re-anchor too, not crash the diff
+    if (entries.isEmpty ||
+        (lastG to latest).exists(g => !t.versionExists(g))) {
+      val v = lastDelta + 1
       val ts = commitTs(t, latest)
       val prev = replayAdds(t)
       val files = t.fileListAt(latest)
       val sz = sizes(t, files)
       val types = typesAt(t, latest)
       val cur = files.map(_._1).toSet
-      writeEntry(t, dv + 1,
-        commitInfo(latest, ts,
-          "GRAFT EXPORT RE-ANCHOR (source log trimmed)",
-          ict = ict(ts)) +:
-          metaData(t, p, schemaAtLatest, ts,
-            // mid-log-enabled tables re-state their provenance on
-            // every metaData restatement; a first-time declaration
-            // stamps this commit as the enablement point
-            ictEnablement = {
-              val st = exportedIctState(t, entries)
-              if (p.ict && !st.exists(_._1)) Some((dv + 1, ts))
-              else st.flatMap(_._2)
-            }) +:
+      val now = publish(v, latest, ts,
+        if (v == 0) "GRAFT EXPORT ANCHOR"
+        else "GRAFT EXPORT RE-ANCHOR (source log trimmed)",
+        None, schemaAtLatest, files)(
+        rowTrackingDomain(t, p, latest) ++
+          clusteringDomain(p, schemaAtLatest) ++
           // full txn state, not a delta: the trimmed source chain
           // means the predecessor state is unknowable, and re-stating
           // a watermark is idempotent under log replay
-          ((if (files.exists(_._2.dv.isDefined) || p.cdf ||
-                isMapped(schemaAtLatest) || isWidened(schemaAtLatest) ||
-                isDefaulted(schemaAtLatest) || p.clusterBy.nonEmpty ||
-                p.ict || hasNtz(schemaAtLatest))
-              Seq(protocol(
-                needDv = files.exists(_._2.dv.isDefined) || p.dvEnabled,
-                needCdf = p.cdf,
-                needMapping = isMapped(schemaAtLatest),
-                needGen = p.gens.nonEmpty,
-                needIdentity = p.idents.nonEmpty,
-            needConstraints = p.constraints.nonEmpty,
-            needRowTracking = p.rowTracking,
-            needWidening = isWidened(schemaAtLatest),
-            needDefaults = isDefaulted(schemaAtLatest),
-            needClustering = p.clusterBy.nonEmpty,
-            needIct = p.ict,
-            needNtz = hasNtz(schemaAtLatest),
-            needAppendOnly = p.appendOnly))
-            else Seq.empty) ++
-            rowTrackingDomain(t, p, latest) ++
-            clusteringDomain(p, schemaAtLatest) ++
-            txnDelta(Map.empty,
-              FileStats.txnsOf(t.commitBody(latest)), ts) ++
-            prev.toSeq.sorted.filterNot(cur).map(remove(_, ts)) ++
-            files.map { case (r, st) =>
-              add(r, st, sz(r), ts, types) }))
-      writeCrc(t, p, dv + 1, files, ts)
-      maybeCheckpoint(t, p, dv + 1, schemaAtLatest, ts, latest)
-      return dv + 1
+          txnDelta(Map.empty,
+            FileStats.txnsOf(t.commitBody(latest)), ts) ++
+          prev.toSeq.sorted.filterNot(cur).map(remove(_, ts)) ++
+          files.map { case (r, st) => add(r, st, sz(r), ts, types) })
+      maybeCheckpoint(t, p, v, now, schemaAtLatest, latest)
+      return v
     }
-    // mid-log ICT upgrade: the table turned ICT on after this log's
-    // metaData was last stated — the FIRST newly-exported commit
-    // re-states metaData with the enablement provenance and the
-    // upgraded protocol (commits before the enablement version keep
-    // resolving timestampAsOf by wall-clock, per the protocol's split)
-    val ictState = if (lastG < latest) exportedIctState(t, entries)
-                   else None
-    var ictUpgrade = lastG < latest && p.ict &&
-      !ictState.exists(_._1)
-    // provenance already stamped by an earlier upgrade commit — every
-    // later metaData restatement (schema change) must carry it, or the
-    // pre-upgrade commits (which lack commitInfo.inCommitTimestamp)
-    // would be read under ICT timestamp-resolution rules
-    var ictProvenance: Option[(Long, Long)] = ictState.flatMap(_._2)
-    while (lastG < latest) {
-      val g = lastG + 1
+    val states = (lastG + 1 to latest).map { g =>
       val ts = commitTs(t, g)
       val before = t.fileListAt(g - 1)
       val after = t.fileListAt(g)
@@ -1132,10 +1068,8 @@ object DeltaExport {
       val adds = after.filterNot(fl => beforeIdent(ident(fl)))
       val removes = before.filterNot(fl => afterIdent(ident(fl)))
       val sz = sizes(t, adds)
-      val schemaChanged =
-        FileStats.schemaOf(t.commitBody(g)) !=
-          FileStats.schemaOf(t.commitBody(g - 1))
       val types = typesAt(t, g)
+      val v = lastDelta + g - lastG
       // Delta compaction semantics: an OPTIMIZE step (bin-pack,
       // re-cluster, REORG PURGE) rearranges bytes without changing
       // logical content, so its adds AND removes export
@@ -1152,73 +1086,28 @@ object DeltaExport {
       // cdc there too); OPTIMIZE steps change no logical row.
       val cdc =
         if (p.cdf && dc && removes.nonEmpty)
-          Seq(writeChangeData(t, g, dv + 1))
+          Seq(writeChangeData(t, g, v))
         else Seq.empty
-      val body =
-        commitInfo(g, ts, FileStats.opOf(t.commitBody(g))
-            .getOrElse("GRAFT COMMIT"),
-          Some((adds.size, removes.size, adds.map(_._2.rows).sum)),
-          ict = ict(ts)) +:
-          // the schema AT g, not the table's current one: exporting
-          // two schema evolutions in one batch must leave the
-          // intermediate version readable (versionAsOf) under the
-          // schema its files were written with
-          ((if (schemaChanged || ictUpgrade)
-              Seq(metaData(t, p,
-                FileStats.schemaOf(t.commitBody(g))
-                  .getOrElse(schemaAtLatest), ts,
-                ictEnablement =
-                  if (ictUpgrade) Some((dv + 1, ts))
-                  else ictProvenance))
-            else Seq.empty) ++
-            // first commit that introduces a DV (or carries cdc into a
-            // log whose anchor predates CDF enablement) upgrades the
-            // protocol in the same entry (replay takes the newest
-            // protocol — DV features are re-stated so a later upgrade
-            // never downgrades an earlier one)
-            (if (adds.exists(_._2.dv.isDefined) || cdc.nonEmpty ||
-                 ictUpgrade ||
-                 (schemaChanged && FileStats.schemaOf(t.commitBody(g))
-                   .exists(s => isMapped(s) || isWidened(s) ||
-                     isDefaulted(s) || hasNtz(s))))
-               Seq(protocol(
-                 needDv = adds.exists(_._2.dv.isDefined) || p.dvEnabled ||
-                   after.exists(_._2.dv.isDefined),
-                 needCdf = p.cdf,
-                 needMapping = FileStats.schemaOf(t.commitBody(g))
-                   .exists(isMapped),
-                 needGen = p.gens.nonEmpty,
-                 needIdentity = p.idents.nonEmpty,
-            needConstraints = p.constraints.nonEmpty,
-            needRowTracking = p.rowTracking,
-            needWidening = FileStats.schemaOf(t.commitBody(g))
-              .exists(isWidened),
-            needDefaults = FileStats.schemaOf(t.commitBody(g))
-              .exists(isDefaulted),
-            needClustering = p.clusterBy.nonEmpty,
-            needIct = p.ict,
-            needNtz = FileStats.schemaOf(t.commitBody(g))
-              .exists(hasNtz),
-            needAppendOnly = p.appendOnly))
-             else Seq.empty) ++
-            rowTrackingDomain(t, p, g) ++
-            cdc ++
-            txnDelta(FileStats.txnsOf(t.commitBody(g - 1)),
-              FileStats.txnsOf(t.commitBody(g)), ts) ++
-            removes.map { case (r, st) =>
-              remove(r, ts, st.dv, dataChange = dc) } ++
-            adds.map { case (r, st) =>
-              add(r, st, sz(r), ts, types, dataChange = dc) })
-      dv += 1
-      writeEntry(t, dv, body)
-      writeCrc(t, p, dv, after, ts)
-      if (ictUpgrade) ictProvenance = Some((dv, ts))
-      ictUpgrade = false
-      lastG = g
+      publish(v, g, ts,
+        FileStats.opOf(t.commitBody(g)).getOrElse("GRAFT COMMIT"),
+        Some((adds.size, removes.size, adds.map(_._2.rows).sum)),
+        // the schema AT g, not the table's current one: exporting two
+        // schema evolutions in one batch must leave the intermediate
+        // version readable (versionAsOf) under the schema its files
+        // were written with
+        FileStats.schemaOf(t.commitBody(g)).getOrElse(schemaAtLatest),
+        after)(
+        rowTrackingDomain(t, p, g) ++
+          cdc ++
+          txnDelta(FileStats.txnsOf(t.commitBody(g - 1)),
+            FileStats.txnsOf(t.commitBody(g)), ts) ++
+          removes.map { case (r, st) =>
+            remove(r, ts, st.dv, dataChange = dc) } ++
+          adds.map { case (r, st) =>
+            add(r, st, sz(r), ts, types, dataChange = dc) })
     }
-    if (dv > lastDelta)
-      maybeCheckpoint(t, p, dv, schemaAtLatest, commitTs(t, latest),
-        latest)
+    val dv = lastDelta + states.size
+    maybeCheckpoint(t, p, dv, states.last, schemaAtLatest, latest)
     dv
   }
 
@@ -1251,11 +1140,7 @@ object DeltaExport {
         .filter("add IS NOT NULL").select("add.path").collect()
         .foreach(r => live += r.getString(0))
     listEntries(t).filter(_ > ckptV).foreach { v =>
-      val in = t.fs.open(entryFile(t, v))
-      val body =
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      body.linesIterator.filter(_.nonEmpty).map(mapper.readTree)
+      entryLines(t, v).map(mapper.readTree)
         .foreach { n =>
           Option(n.get("add")).foreach(a => live += a.get("path").asText)
           Option(n.get("remove")).foreach(r =>
@@ -1334,7 +1219,10 @@ object DeltaExport {
 
   /** Write the checkpoint for delta version `dv`: the REPLAYED state
     * (protocol + metaData + live adds + txn watermarks), named by the
-    * protocol's convention, then flip `_last_checkpoint`.
+    * protocol's convention, then flip `_last_checkpoint`. `state` is
+    * what the log declares at `dv`; its protocol and metaData rows are
+    * restated from it, so a reader replaying from the checkpoint alone
+    * sees exactly the json log's contract.
     *
     * The replay is a SPARK JOB, like Delta's own checkpointing: the
     * prior checkpoint parquet is unioned with the json tail (parsed
@@ -1346,7 +1234,7 @@ object DeltaExport {
     * never follows the pointer into a torn checkpoint.
     */
   private def writeCheckpoint(t: ResourceTable, p: Pinned, dv: Long,
-                              schemaJson: String, ts: Long,
+                              state: DeltaState, schemaJson: String,
                               graftHead: Long): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions._
@@ -1508,92 +1396,24 @@ object DeltaExport {
       .persist()
     try {
       val nBody = body.count()
-      // the checkpoint restates the protocol: DV-bearing live adds
-      // need the table-features form, else readers replaying from the
-      // checkpoint alone would see DVs under a v1 reader contract;
-      // column mapping and (in v2 mode) v2Checkpoint join the same
-      // restatement for the same reason
-      val needDv = body
-        .filter(col("add").isNotNull &&
-          col("add.deletionVector").isNotNull)
-        .limit(1).count() > 0
-      val mappedT = isMapped(schemaJson)
+      // v2Checkpoint is a reader-writer table feature: the V2 layout's
+      // protocol row takes the table-features form, legacy features
+      // listed explicitly so the upgrade loses nothing
       val v2Mode = spark.conf
         .getOption("spark.graft.export.checkpointV2")
         .exists(_.toBoolean)
-      val ntzT = hasNtz(schemaJson)
-      // restate the json log's newest protocol VERBATIM (replay takes
-      // the newest — a checkpoint-only reader must not see less than
-      // the json tail declared); derive through the shared protocol()
-      // builder only when log cleanup already dropped every
-      // protocol-bearing entry, so both forms stay mirror-identical
-      val baseProto = newestExportedProtocolRow(t).getOrElse(
-        protoNodeRow(protocol(
-          needDv = needDv || p.dvEnabled,
-          needCdf = p.cdf,
-          needMapping = mappedT,
-          needGen = p.gens.nonEmpty,
-          needIdentity = p.idents.nonEmpty,
-          needConstraints = p.constraints.nonEmpty,
-          needRowTracking = p.rowTracking,
-          needWidening = isWidened(schemaJson),
-          needDefaults = isDefaulted(schemaJson),
-          needClustering = p.clusterBy.nonEmpty,
-          needIct = p.ict,
-          needNtz = ntzT,
-          needAppendOnly = p.appendOnly).get("protocol")))
-      val protoRow =
-        if (!v2Mode) baseProto
-        else {
-          // v2Checkpoint is a reader-writer table feature: force the
-          // table-features form, expanding a legacy protocol's implied
-          // features so the upgrade loses nothing (PROTOCOL.md's
-          // feature-by-version table)
-          val rf0 = Option(baseProto.getSeq[String](2)).getOrElse(
-            if (baseProto.getInt(0) >= 2) Seq("columnMapping")
-            else Seq.empty[String])
-          val wf0 = Option(baseProto.getSeq[String](3)).getOrElse {
-            val w = baseProto.getInt(1)
-            Seq("appendOnly", "invariants") ++
-              (if (w >= 3) Seq("checkConstraints") else Nil) ++
-              (if (w >= 4) Seq("changeDataFeed", "generatedColumns")
-               else Nil) ++
-              (if (w >= 5) Seq("columnMapping") else Nil) ++
-              (if (w >= 6) Seq("identityColumns") else Nil)
-          }
-          Row(3, 7, rf0 :+ "v2Checkpoint", wf0 :+ "v2Checkpoint")
-        }
-      // the checkpoint's metaData must be self-sufficient: a reader
-      // replaying from it alone needs the DELTA-dialect schema and the
-      // table configuration (CDF flag, columnMapping mode) — the same
-      // translation the json metaData action gets
-      val (deltaJson, maxColId) = deltaSchemaJson(schemaJson)
-      val conf = Map.empty[String, String] ++
-        (if (p.cdf)
-           Map("delta.enableChangeDataFeed" -> "true") else Map.empty) ++
-        // enablement provenance is NOT restated here: anchor-enabled
-        // logs never have any, and a mid-log upgrade's provenance only
-        // matters for resolving timestamps of PRE-upgrade commits —
-        // which log cleanup (the only path to checkpoint-only history)
-        // has already dropped
-        (if (p.ict)
-           Map("delta.enableInCommitTimestamps" -> "true")
-         else Map.empty) ++
-        // append-only enforcement must survive checkpoint-only replay:
-        // a foreign writer that never reads the cleaned json tail
-        // still may not remove data
-        (if (p.appendOnly) Map("delta.appendOnly" -> "true")
-         else Map.empty) ++
-        (if (p.rowTracking)
-           Map("delta.enableRowTracking" -> "true") else Map.empty) ++
-        p.constraints.map { case (name, sql) =>
-          s"delta.constraints.$name" -> sql } ++
-        maxColId.fold(Map.empty[String, String])(mx =>
-          Map("delta.columnMapping.mode" -> "name",
-            "delta.columnMapping.maxColumnId" -> mx.toString))
-      val emptyMap = Map.empty[String, String]
-      val metaRow = Row(tableId(t), Row("parquet", emptyMap), deltaJson,
-        Seq.empty[String], conf, ts)
+      val protoRow = protoNodeRow((if (!v2Mode) state
+        else state.copy(features = state.features + "v2Checkpoint"))
+        .protocolAction.get("protocol"))
+      def strMap(n: JsonNode) =
+        n.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+      val m = state.meta
+      val metaRow = Row(m.get("id").asText,
+        Row(m.get("format").get("provider").asText,
+          strMap(m.get("format").get("options"))),
+        m.get("schemaString").asText,
+        m.get("partitionColumns").asScala.map(_.asText).toSeq,
+        strMap(m.get("configuration")), m.get("createdTime").asLong)
       // latest per-domain state at the EXPORTED graft head (the
       // version this export run replayed to — NOT the table's live
       // head, which a concurrent writer may already have advanced:
@@ -1897,10 +1717,10 @@ object DeltaExport {
     * possibly-advanced live head).
     */
   private def maybeCheckpoint(t: ResourceTable, p: Pinned, dv: Long,
-                              schemaJson: String, ts: Long,
+                              state: DeltaState, schemaJson: String,
                               graftHead: Long): Unit = {
     if (dv - newestCheckpoint(t.fs, deltaDir(t))._1 >= CheckpointInterval)
-      writeCheckpoint(t, p, dv, schemaJson, ts, graftHead)
+      writeCheckpoint(t, p, dv, state, schemaJson, graftHead)
   }
 
   /** Delta's metadata cleanup (`delta.logRetentionDuration`) for the
@@ -1943,11 +1763,7 @@ object DeltaExport {
     val cdDir = new HPath(t.path, "_change_data")
     if (t.fs.exists(cdDir)) {
       val referenced = listEntries(t).flatMap { v =>
-        val in = t.fs.open(entryFile(t, v))
-        val body =
-          try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-          finally in.close()
-        body.linesIterator.filter(_.nonEmpty).map(mapper.readTree)
+        entryLines(t, v).map(mapper.readTree)
           .flatMap(n => Option(n.get("cdc")).map(_.get("path").asText))
       }.map(p => p.stripPrefix("_change_data/")).toSet
       t.fs.listStatus(cdDir).map(_.getPath)
@@ -2079,6 +1895,12 @@ object DeltaExport {
       case o => o
     }
 
+  /** A live file's newest add action, as replayed from the log. */
+  private final case class LiveAdd(
+      pv: Map[String, String],
+      dv: Option[DeletionVectors.Descriptor],
+      size: Long, modTime: Long, stats: Option[String])
+
   /** Standalone reader for the exported protocol subset: replays
     * `_delta_log/` (protocol gate, last metaData schema, add/remove
     * set) and reads the live files under the log's schema. Works on
@@ -2113,12 +1935,6 @@ object DeltaExport {
     * cleaned by [[cleanupLog]], or files vacuumed since — never a
     * silently wrong snapshot.
     */
-  /** A live file's newest add action, as replayed from the log. */
-  private final case class LiveAdd(
-      pv: Map[String, String],
-      dv: Option[DeletionVectors.Descriptor],
-      size: Long, modTime: Long, stats: Option[String])
-
   def readSnapshot(spark: SparkSession, tablePath: String,
                    versionAsOf: Long = -1L): DataFrame = {
     val root = new HPath(tablePath)

@@ -1666,8 +1666,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     * for per-key file pruning (tight); larger batches prune on the
     * batch's [min,max] key range only (coarse, still conservative).
     */
-  private def collectKeysLimit: Long =
-    spark.conf.get("graft.table.merge.collectKeysLimit", "100000").toLong
+  private val collectKeysLimit = 100000L
 
   /** Delta's optimizedWrite (settings.py:47, default false): when
     * enabled and the table is clustered, each mutation's NEW files are
@@ -2067,11 +2066,6 @@ final class ResourceTable(val spark: SparkSession, val path: String,
       obs.get("_rows").asInstanceOf[Long]
     }
 
-  /** J2 — MERGE delete: drop target rows whose key appears in `ids`
-    * (a single-column DataFrame of key values). Same file-granular
-    * scope as upsert: only files whose stats admit a listed key are
-    * rewritten.
-    */
   // ---------------- deletion vectors --------------------------------
 
   /** file_path scheme normalizer shared with DeltaExport's DV scan:
@@ -2167,8 +2161,8 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     * standard [[deleteMatching]] routes through the deletion-vector
     * path (zero file rewrites) — callers keep the MERGE-delete API
     * and opt into the storage behavior per table, exactly how the
-    * property works on a Delta table. Also enableable session-wide
-    * via `graft.table.deletionVectors=true`.
+    * property works on a Delta table. A table property only, like
+    * the others: no session setting turns it on.
     */
   def enableDeletionVectors(): ResourceTable = {
     writeFile(new HPath(root, "_meta_dv_enabled"), "true")
@@ -2200,12 +2194,13 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     else readFile(bloomMetaFile).split("\n").map(_.trim)
       .filter(_.nonEmpty).toSeq
 
-  /** Bloom sizing/probe knobs (session conf): target false-positive
-    * rate, and the probe-survivor cap past which pruning is abandoned
-    * for a column (collects must stay bounded on the driver).
+  /** Bloom sizing: the target false-positive rate of each sidecar. */
+  private val bloomFpp = 0.01
+
+  /** The probe-survivor cap (session conf) past which pruning is
+    * abandoned for a column (collects must stay bounded on the
+    * driver).
     */
-  private def bloomFpp: Double =
-    spark.conf.get("graft.table.bloomIndex.fpp", "0.01").toDouble
   private def bloomProbeKeepCap: Int =
     spark.conf.get("graft.table.bloomIndex.probeKeepCap", "100000").toInt
 
@@ -2301,8 +2296,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     fs.exists(new HPath(root, "_meta_append_only"))
 
   private[tables] def dvEnabled: Boolean =
-    spark.conf.get("graft.table.deletionVectors", "false").toBoolean ||
-      fs.exists(new HPath(root, "_meta_dv_enabled"))
+    fs.exists(new HPath(root, "_meta_dv_enabled"))
 
   /** J2 at O(deleted rows): delete by DELETION VECTOR instead of file
     * rewrite. Matching rows' positions are found with one scan of the
@@ -2436,6 +2430,11 @@ final class ResourceTable(val spark: SparkSession, val path: String,
       op = "DELETE", key = key, rebase = rebase): Unit
   }
 
+  /** J2 — MERGE delete: drop target rows whose key appears in `ids`
+    * (a single-column DataFrame of key values). Same file-granular
+    * scope as upsert: only files whose stats admit a listed key are
+    * rewritten.
+    */
   def deleteMatching(ids: DataFrame, key: String): Long = {
     if (dvEnabled) return deleteMatchingDv(ids, key)
     val idsKeyed = ids.toDF(key).cache()
@@ -3276,15 +3275,6 @@ final class ResourceTable(val spark: SparkSession, val path: String,
       files: Seq[(String, FileStats.FileStat)]): Long =
     manifestSizes(files).values.sum
 
-  /** Write `newData` (when present) into a writer-unique dir, then
-    * publish the commit whose manifest = new files ∪ `keptFiles`
-    * (carried forward by reference with their existing stats). The
-    * commit file — created with overwrite=false — is the only pointer
-    * readers follow. If another writer won the race the create throws,
-    * this writer's orphan dir is deleted, and the caller's retry
-    * recomputes against the new state (optimistic concurrency, like
-    * Delta). Schema and manifest flip in the same atomic create.
-    */
   /** Conflict-check spec for optimistic commit REBASE — Delta's
     * ConflictChecker shape (delta-spark OptimisticTransaction /
     * ConflictChecker; PROTOCOL.md requires only that the winner's
@@ -3317,6 +3307,15 @@ final class ResourceTable(val spark: SparkSession, val path: String,
       conflicts: (Seq[(String, FileStats.FileStat)],
                   Seq[(String, FileStats.FileStat)]) => Boolean)
 
+  /** Write `newData` (when present) into a writer-unique dir, then
+    * publish the commit whose manifest = new files ∪ `keptFiles`
+    * (carried forward by reference with their existing stats). The
+    * commit file — created with overwrite=false — is the only pointer
+    * readers follow. If another writer won the race the create throws,
+    * this writer's orphan dir is deleted, and the caller's retry
+    * recomputes against the new state (optimistic concurrency, like
+    * Delta). Schema and manifest flip in the same atomic create.
+    */
   private def commitFiles(newData: Option[DataFrame],
       keptFiles: Seq[(String, FileStats.FileStat)],
       schemaJson: String,

@@ -15,7 +15,10 @@ import scala.jdk.CollectionConverters._
   * enforced feature (legacy version implications do not apply there),
   * mid-log ICT enablement provenance must survive later metaData
   * restatements, and a checkpoint-only reader must never see a
-  * downgraded protocol vs the json tail.
+  * downgraded protocol vs the json tail. The protocol and metaData
+  * come from one derivation: the checkpoint restates the json
+  * metaData exactly, a property set after the first export reaches
+  * the log, and an entry that changes neither restates neither.
   */
 class ExportProtocolSpec extends SparkSpec {
   import graft.SparkSpec._
@@ -40,6 +43,35 @@ class ExportProtocolSpec extends SparkSpec {
                          list: String): Set[String] =
     Option(n.get(list)).map(_.asScala.map(_.asText).toSet)
       .getOrElse(Set.empty)
+
+  private def entryVersions(path: String): Seq[Long] =
+    Files.list(Paths.get(path, "_delta_log")).iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.endsWith(".json") && !n.startsWith("."))
+      .map(_.stripSuffix(".json").toLong).toSeq.sorted
+
+  /** The newest `kind` action in the json entries at or below `upTo`. */
+  private def newest(path: String, kind: String,
+                     upTo: Long = Long.MaxValue) =
+    entryVersions(path).filter(_ <= upTo).reverseIterator
+      .flatMap(v => logLines(path, v).flatMap(n => Option(n.get(kind)))
+        .lastOption)
+      .next()
+
+  private def conf(meta: com.fasterxml.jackson.databind.JsonNode) =
+    meta.get("configuration").fields().asScala
+      .map(e => e.getKey -> e.getValue.asText).toMap
+
+  /** The legacy features a (minReader, minWriter) pair carries, or the
+    * listed ones on the table-features form.
+    */
+  private def implied(proto: com.fasterxml.jackson.databind.JsonNode) = {
+    val w = proto.get("minWriterVersion").asInt
+    if (w >= 7) featureSet(proto, "writerFeatures")
+    else Set("appendOnly" -> 2, "checkConstraints" -> 3,
+      "changeDataFeed" -> 4, "generatedColumns" -> 4,
+      "identityColumns" -> 6).collect { case (n, v) if w >= v => n }
+  }
 
   test("timestampNtz alone forcing reader 3 still lists columnMapping " +
       "in readerFeatures for a mapped table") {
@@ -170,6 +202,118 @@ class ExportProtocolSpec extends SparkSpec {
       dom)
     assert(dom("delta.clustering").contains("id"), dom)
     assert(DeltaExport.readSnapshot(spark, path).count() == 11L)
+  }
+
+  private val ictProvenance = Set(
+    "delta.inCommitTimestampEnablementVersion",
+    "delta.inCommitTimestampEnablementTimestamp")
+
+  /** Exports `t` once per step until a checkpoint exists, then checks
+    * that the checkpoint's metaData restates the newest json metaData
+    * at or below its version.
+    */
+  private def assertCheckpointMetaMatchesJson(path: String,
+                                              step: Int => Unit): Unit = {
+    (1 to 11).foreach(step)
+    val ckpt = Files.list(Paths.get(path, "_delta_log")).iterator()
+      .asScala.map(_.getFileName.toString)
+      .collect { case n if n.endsWith(".checkpoint.parquet") =>
+        n.takeWhile(_ != '.').toLong }.toSeq
+    assert(ckpt.nonEmpty, "no checkpoint after 11 exports")
+    val v = ckpt.max
+    val row = spark.read
+      .parquet(f"$path/_delta_log/$v%020d.checkpoint.parquet")
+      .filter("metaData IS NOT NULL")
+      .select("metaData.schemaString", "metaData.configuration")
+      .collect()
+    assert(row.length == 1)
+    val json = newest(path, "metaData", v)
+    assert(row.head.getString(0) == json.get("schemaString").asText)
+    assert(row.head.getMap[String, String](1).toMap -- ictProvenance ==
+      conf(json) -- ictProvenance)
+  }
+
+  test("checkpoint metaData equals the newest json metaData for a " +
+      "generated-column table") {
+    val path = s"${tmpDir("xpgenck")}/T.parquet"
+    val t = ResourceTable(spark, path).createIfNotExists(StructType(Seq(
+      StructField("id", StringType), StructField("v", IntegerType),
+      StructField("w", IntegerType))))
+    t.addGeneratedColumn("w", "v * 2")
+    assertCheckpointMetaMatchesJson(path, { i =>
+      t.upsert(df(s"k$i" -> i), "id")
+      DeltaExport.export(t)
+    })
+    assert(newest(path, "metaData").get("schemaString").asText
+      .contains("delta.generationExpression"))
+  }
+
+  test("checkpoint metaData equals the newest json metaData for an " +
+      "identity table") {
+    val path = s"${tmpDir("xpidck")}/T.parquet"
+    val t = ResourceTable(spark, path).createIfNotExists(StructType(Seq(
+      StructField("id", StringType), StructField("v", IntegerType),
+      StructField("rid", LongType))))
+    t.addIdentityColumn("rid")
+    assertCheckpointMetaMatchesJson(path, { i =>
+      t.upsert(df(s"k$i" -> i), "id")
+      DeltaExport.export(t)
+    })
+    assert(newest(path, "metaData").get("schemaString").asText
+      .contains("delta.identity.highWaterMark"))
+  }
+
+  test("appendOnly and a CHECK constraint set after the first export " +
+      "reach the exported metaData and protocol") {
+    val path = s"${tmpDir("xplate")}/T.parquet"
+    val t = ResourceTable(spark, path).createIfNotExists(schema)
+    t.upsert(df("a" -> 1), "id")
+    DeltaExport.export(t)
+    t.setAppendOnly()
+    t.addCheckConstraint("pos", "v > 0")
+    t.upsert(df("b" -> 2), "id")
+    DeltaExport.export(t)
+    val c = conf(newest(path, "metaData"))
+    assert(c.get("delta.appendOnly").contains("true"), c)
+    assert(c.get("delta.constraints.pos").contains("v > 0"), c)
+    val features = implied(newest(path, "protocol"))
+    assert(features("appendOnly") && features("checkConstraints"),
+      features)
+  }
+
+  test("change data feed enabled after the first export declares the " +
+      "table property with its first cdc entry") {
+    val path = s"${tmpDir("xplatecdf")}/T.parquet"
+    val t = ResourceTable(spark, path).createIfNotExists(schema)
+    t.upsert(df("a" -> 1, "b" -> 2), "id")
+    DeltaExport.export(t)
+    t.enableChangeDataFeed()
+    t.deleteMatching(df("a" -> 0).select("id"), "id")
+    val dv = DeltaExport.export(t)
+    assert(logLines(path, dv).exists(_.has("cdc")))
+    assert(conf(newest(path, "metaData"))
+      .get("delta.enableChangeDataFeed").contains("true"))
+    assert(implied(newest(path, "protocol"))("changeDataFeed"))
+  }
+
+  test("an export with no property or schema change restates neither " +
+      "protocol nor metaData") {
+    val path = s"${tmpDir("xpquiet")}/T.parquet"
+    val t = ResourceTable(spark, path).createIfNotExists(schema)
+      .enableChangeDataFeed().enableInCommitTimestamps()
+    t.addCheckConstraint("pos", "v > 0")
+    t.upsert(df("a" -> 1, "b" -> 2), "id")
+    assert(DeltaExport.export(t) == 0L)
+    t.upsert(df("a" -> 10, "c" -> 3), "id")
+    t.deleteMatching(df("b" -> 0).select("id"), "id")
+    val dv = DeltaExport.export(t)
+    assert(dv == 2L)
+    (1L to dv).foreach { v =>
+      val kinds = logLines(path, v).flatMap(_.fieldNames().asScala)
+      assert(!kinds.contains("protocol") && !kinds.contains("metaData"),
+        s"entry $v restated: $kinds")
+    }
+    assert(DeltaExport.readSnapshot(spark, path).count() == 2L)
   }
 
   test("append-only enforcement is keyed on the exemption flag: " +

@@ -11,7 +11,11 @@ path — checkpoint parquet via DuckDB, json tail via the stdlib — then:
      file, and every minValues/maxValues bound actually bounds the
      file's data (a wrong exported bound would make a real external
      engine skip files it needed — silent data loss);
-  3. verifies txn watermarks survive checkpoint+tail replay.
+  3. verifies txn watermarks survive checkpoint+tail replay;
+  4. verifies every checkpoint's metaData equals the newest json
+     metaData at or below its version, while that entry still exists
+     (a checkpoint-only reader must see the table the json log
+     describes).
 
 Usage: check_delta_export.py <tablePath> <expectedParquetDir>
 Exit 0 on full match; prints one result line per check.
@@ -508,6 +512,11 @@ def main():
     print(f"txns (ckpt v{ckpt_v}): {sorted(txns.items())}")
     print(check_crc(table, sizes, dvs))
 
+    # 3a. every checkpoint restates the json log's metaData
+    for msg, good in check_checkpoint_meta(table):
+        print(msg)
+        ok &= good
+
     # 3b. domain metadata: the clustering feature promises a
     #     delta.clustering domain naming physical schema columns; both
     #     domains must survive the same checkpoint+tail replay the
@@ -524,6 +533,65 @@ def main():
 
     con.close()
     sys.exit(0 if ok else 1)
+
+
+# Not compared: createdTime is stamped per restatement, and the ICT
+# enablement provenance only dates commits a checkpoint-only reader
+# no longer has.
+META_EXEMPT_CONF = ("delta.inCommitTimestampEnablementVersion",
+                    "delta.inCommitTimestampEnablementTimestamp")
+
+
+def comparable_meta(m):
+    return {
+        "id": m.get("id"),
+        "format": {"provider": (m.get("format") or {}).get("provider"),
+                   "options": (m.get("format") or {}).get("options") or {}},
+        "schemaString": m.get("schemaString"),
+        "partitionColumns": m.get("partitionColumns") or [],
+        "configuration": {
+            k: v for k, v in (m.get("configuration") or {}).items()
+            if k not in META_EXEMPT_CONF},
+    }
+
+
+def check_checkpoint_meta(table):
+    """[(message, ok)] — one per complete checkpoint whose metaData can
+    be compared: each must equal the newest json metaData at or below
+    its version. Skipped when log cleanup removed every such entry."""
+    logdir = os.path.join(table, "_delta_log")
+    metas = {}  # json entry version -> its (last) metaData
+    for f in os.listdir(logdir):
+        if f.endswith(".json") and not f.startswith("."):
+            with open(os.path.join(logdir, f)) as fh:
+                for line in fh:
+                    if line.strip():
+                        n = json.loads(line)
+                        if "metaData" in n:
+                            metas[int(f[: -len(".json")])] = n["metaData"]
+    out = []
+    con = duckdb.connect()
+    for v, parts in sorted(complete_checkpoints(logdir).items()):
+        below = [e for e in metas if e <= v]
+        if not below:
+            out.append((f"ckpt-meta v{v}: skipped (no json metaData "
+                        "at or below it survives)", True))
+            continue
+        plist = ", ".join(f"'{p}'" for p in parts)
+        rows = con.sql(
+            f"SELECT to_json(metaData) FROM parquet_scan([{plist}], "
+            "union_by_name=true) WHERE metaData.id IS NOT NULL"
+        ).fetchall()
+        want = comparable_meta(metas[max(below)])
+        got = [comparable_meta(json.loads(r[0])) for r in rows]
+        if got == [want]:
+            out.append((f"ckpt-meta v{v}: equals json metaData "
+                        f"v{max(below)}", True))
+        else:
+            out.append((f"ckpt-meta v{v}: MISMATCH vs json metaData "
+                        f"v{max(below)}: {got} != {want}", False))
+    con.close()
+    return out
 
 
 def check_domains(domains, features, phys):
