@@ -356,10 +356,10 @@ object DeltaExport {
     * live json tail always carries the current mark; readers ignore
     * domain metadata entirely.
     */
-  private def rowTrackingDomain(t: ResourceTable, p: Pinned, g: Long)
+  private def rowTrackingDomain(p: Pinned, c: FileStats.Commit)
       : Seq[ObjectNode] =
     if (!p.rowTracking) Seq.empty
-    else FileStats.rowHwmOf(t.commitBody(g)).toSeq
+    else c.rowHwm.toSeq
       // graft's mark is the next UNASSIGNED id; Delta's is the highest
       // ASSIGNED one — off by one, and absent before any assignment
       .filter(_ > 0).map { hwm =>
@@ -432,9 +432,10 @@ object DeltaExport {
     * content-neutral rewrite from being misread as delete+insert of
     * every row it touched.
     */
-  private def writeChangeData(t: ResourceTable, g: Long,
+  private def writeChangeData(t: ResourceTable, c: FileStats.Commit,
                               deltaV: Long): ObjectNode = {
-    val cdfLogical = FileStats.keyOf(t.commitBody(g)) match {
+    val g = c.version
+    val cdfLogical = c.key match {
       case Some(k) => t.changes(g - 1, g, k)
       case None => t.changesByContent(g - 1, g)
     }
@@ -572,11 +573,9 @@ object DeltaExport {
     * graft commit recorded (falling back to the current table schema
     * for pre-schema-field commit bodies).
     */
-  private def typesAt(t: ResourceTable, g: Long): Map[String, DataType] =
-    FileStats.schemaOf(t.commitBody(g))
-      .flatMap(j => scala.util.Try(
-        DataType.fromJson(j).asInstanceOf[StructType]).toOption)
-      .getOrElse(t.schema())
+  private def typesAt(t: ResourceTable,
+                      c: FileStats.Commit): Map[String, DataType] =
+    c.schema.getOrElse(t.schema())
       // per-file stats key PHYSICAL names under column mapping
       .fields.map(fd => (if (fd.metadata.contains(ResourceTable.PhysKey))
           fd.metadata.getString(ResourceTable.PhysKey)
@@ -640,12 +639,6 @@ object DeltaExport {
       }
     known.map { case (r, st) => r -> st.bytes.get }.toMap ++ listed
   }
-
-  private def commitTs(t: ResourceTable, g: Long): Long =
-    FileStats.tsOf(t.commitBody(g)).getOrElse(
-      t.fs.getFileStatus(
-        new HPath(new HPath(t.path, "_log"), f"$g%020d.commit"))
-        .getModificationTime)
 
   /** Delta VERSION CHECKSUM (`<v>.crc`, delta-spark's VersionChecksum):
     * one json object of post-commit table state an aware reader uses
@@ -953,7 +946,7 @@ object DeltaExport {
     * flip mid-run and publish an entry whose protocol, metaData,
     * domain and checkpoint rows disagree with each other. The flags
     * live in `_meta_*` side files, not the commit log, so they cannot
-    * be derived from commitBody(latest); single-read pinning restores
+    * be derived from commit(latest); single-read pinning restores
     * the internal-consistency half of the purity invariant (a property
     * change racing the export still lands in the NEXT run, atomically).
     */
@@ -985,8 +978,8 @@ object DeltaExport {
     // never-overwrite rule relies on); the side-file-backed property
     // flags can't be log-derived, so they are pinned once in `p` —
     // internally consistent across everything this run publishes.
-    val schemaAtLatest = FileStats.schemaOf(t.commitBody(latest))
-      .getOrElse(t.schema().json)
+    val head = t.commit(latest)
+    val schemaAtLatest = head.schemaJson.getOrElse(t.schema().json)
     // ICT tables surface the (already monotonic) graft commit clock in
     // every exported commitInfo
     def ict(ts: Long): Option[Long] =
@@ -1032,32 +1025,36 @@ object DeltaExport {
     if (entries.isEmpty ||
         (lastG to latest).exists(g => !t.versionExists(g))) {
       val v = lastDelta + 1
-      val ts = commitTs(t, latest)
+      val ts = t.commitTs(head)
       val prev = replayAdds(t)
-      val files = t.fileListAt(latest)
+      val files = head.manifest
       val sz = sizes(t, files)
-      val types = typesAt(t, latest)
+      val types = typesAt(t, head)
       val cur = files.map(_._1).toSet
       val now = publish(v, latest, ts,
         if (v == 0) "GRAFT EXPORT ANCHOR"
         else "GRAFT EXPORT RE-ANCHOR (source log trimmed)",
         None, schemaAtLatest, files)(
-        rowTrackingDomain(t, p, latest) ++
+        rowTrackingDomain(p, head) ++
           clusteringDomain(p, schemaAtLatest) ++
           // full txn state, not a delta: the trimmed source chain
           // means the predecessor state is unknowable, and re-stating
           // a watermark is idempotent under log replay
-          txnDelta(Map.empty,
-            FileStats.txnsOf(t.commitBody(latest)), ts) ++
+          txnDelta(Map.empty, head.txns, ts) ++
           prev.toSeq.sorted.filterNot(cur).map(remove(_, ts)) ++
           files.map { case (r, st) => add(r, st, sz(r), ts, types) })
-      maybeCheckpoint(t, p, v, now, schemaAtLatest, latest)
+      maybeCheckpoint(t, p, v, now, schemaAtLatest, head)
       return v
     }
-    val states = (lastG + 1 to latest).map { g =>
-      val ts = commitTs(t, g)
-      val before = t.fileListAt(g - 1)
-      val after = t.fileListAt(g)
+    // each graft commit is read and decoded once per run: commits g-1
+    // and g pass through the loop as a pair
+    val commits = (lastG to latest).iterator
+      .map(g => if (g == latest) head else t.commit(g))
+    val states = commits.sliding(2).map { case Seq(prev, cur) =>
+      val g = cur.version
+      val ts = t.commitTs(cur)
+      val before = prev.manifest
+      val after = cur.manifest
       // file identity is (path, deletion vector): a DV delete keeps the
       // path but changes logical content, exported per the protocol as
       // remove(path, old dv) + add(path, new dv) in one commit — the
@@ -1068,7 +1065,7 @@ object DeltaExport {
       val adds = after.filterNot(fl => beforeIdent(ident(fl)))
       val removes = before.filterNot(fl => afterIdent(ident(fl)))
       val sz = sizes(t, adds)
-      val types = typesAt(t, g)
+      val types = typesAt(t, cur)
       val v = lastDelta + g - lastG
       // Delta compaction semantics: an OPTIMIZE step (bin-pack,
       // re-cluster, REORG PURGE) rearranges bytes without changing
@@ -1077,7 +1074,7 @@ object DeltaExport {
       // must not reprocess the rewritten files as new data. The
       // commit's own dataChange flag decides (op-label fallback only
       // for pre-flag commits)
-      val dc = !t.isRearrangement(g)
+      val dc = !cur.isRearrangement
       // CHANGE DATA FEED: a dataChange commit that also REMOVES files
       // (partial rewrite / DV kill) cannot be row-inferred from its
       // add/remove actions, so a CDF-enabled table materializes the
@@ -1086,28 +1083,26 @@ object DeltaExport {
       // cdc there too); OPTIMIZE steps change no logical row.
       val cdc =
         if (p.cdf && dc && removes.nonEmpty)
-          Seq(writeChangeData(t, g, v))
+          Seq(writeChangeData(t, cur, v))
         else Seq.empty
-      publish(v, g, ts,
-        FileStats.opOf(t.commitBody(g)).getOrElse("GRAFT COMMIT"),
+      publish(v, g, ts, cur.op.getOrElse("GRAFT COMMIT"),
         Some((adds.size, removes.size, adds.map(_._2.rows).sum)),
         // the schema AT g, not the table's current one: exporting two
         // schema evolutions in one batch must leave the intermediate
         // version readable (versionAsOf) under the schema its files
         // were written with
-        FileStats.schemaOf(t.commitBody(g)).getOrElse(schemaAtLatest),
+        cur.schemaJson.getOrElse(schemaAtLatest),
         after)(
-        rowTrackingDomain(t, p, g) ++
+        rowTrackingDomain(p, cur) ++
           cdc ++
-          txnDelta(FileStats.txnsOf(t.commitBody(g - 1)),
-            FileStats.txnsOf(t.commitBody(g)), ts) ++
+          txnDelta(prev.txns, cur.txns, ts) ++
           removes.map { case (r, st) =>
             remove(r, ts, st.dv, dataChange = dc) } ++
           adds.map { case (r, st) =>
             add(r, st, sz(r), ts, types, dataChange = dc) })
-    }
+    }.toVector
     val dv = lastDelta + states.size
-    maybeCheckpoint(t, p, dv, states.last, schemaAtLatest, latest)
+    maybeCheckpoint(t, p, dv, states.last, schemaAtLatest, head)
     dv
   }
 
@@ -1235,7 +1230,7 @@ object DeltaExport {
     */
   private def writeCheckpoint(t: ResourceTable, p: Pinned, dv: Long,
                               state: DeltaState, schemaJson: String,
-                              graftHead: Long): Unit = {
+                              graftHead: FileStats.Commit): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions._
     val spark = t.spark
@@ -1420,7 +1415,7 @@ object DeltaExport {
       // a checkpoint at dv must be a pure function of the log at dv,
       // or two racing exporters publish non-equivalent checkpoints).
       // Graft's OWN two domains are recomputed (rowTracking reads the
-      // hwm from graftHead's commit body; clustering physical names
+      // hwm from the graftHead commit; clustering physical names
       // come from the same schemaJson the checkpoint metaData row
       // carries) and override the replayed state; every OTHER domain
       // found in the prior checkpoint or json tail is carried forward
@@ -1428,7 +1423,7 @@ object DeltaExport {
       // cleanupLog trims the entries that declared it. The V2 path
       // inherits these rows too since the manifest carries `head`.
       val graftDoms = (clusteringDomain(p, schemaJson) ++
-          rowTrackingDomain(t, p, graftHead))
+          rowTrackingDomain(p, graftHead))
         .map { n =>
           val d = n.get("domainMetadata")
           d.get("domain").asText ->
@@ -1712,13 +1707,13 @@ object DeltaExport {
   }
 
   /** Checkpoint cadence check after exporting up to `dv`; `graftHead`
-    * is the graft version delta `dv` mirrors (captured by the export
+    * is the graft commit delta `dv` mirrors (captured by the export
     * run — domain state is derived from it, never from the table's
     * possibly-advanced live head).
     */
   private def maybeCheckpoint(t: ResourceTable, p: Pinned, dv: Long,
                               state: DeltaState, schemaJson: String,
-                              graftHead: Long): Unit = {
+                              graftHead: FileStats.Commit): Unit = {
     if (dv - newestCheckpoint(t.fs, deltaDir(t))._1 >= CheckpointInterval)
       writeCheckpoint(t, p, dv, state, schemaJson, graftHead)
   }

@@ -8,6 +8,7 @@ import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
@@ -227,172 +228,221 @@ object FileStats {
       for (n1 <- a.numNulls; n2 <- b.numNulls) yield n1 + n2)
   }
 
-  // ---------------- JSON round-trip (commit-log embedding) -----------
+  // ---------------- the `_log` commit codec ----------------------------
 
+  import com.fasterxml.jackson.core.{JsonGenerator, JsonToken}
   import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-  import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
   private val mapper = new ObjectMapper()
 
-  def toJsonNode(stats: Map[String, FileStat]): ObjectNode = {
-    val f = JsonNodeFactory.instance
-    val root = f.objectNode()
-    stats.foreach { case (file, fsStat) =>
-      val fo = f.objectNode()
-      fo.put("rows", fsStat.rows)
-      fsStat.bytes.foreach(fo.put("bytes", _))
-      fsStat.mtime.foreach(fo.put("mtime", _))
-      fsStat.baseRowId.foreach(fo.put("brid", _))
-      fsStat.rowVer.foreach(fo.put("rcv", _))
-      fsStat.dv.foreach { d =>
-        val dn = f.objectNode()
-        dn.put("st", d.st); dn.put("d", d.d); dn.put("off", d.off)
-        dn.put("sz", d.sz); dn.put("card", d.card)
-        fo.replace("dv", dn)
+  /** One `_log/<v>.commit` body — the single codec of graft's commit
+    * log: [[encode]] is the only writer of a body, [[CommitStream]] the
+    * only parser ([[Commit.decode]] is that parser with its manifest
+    * drained). Fields absent from older bodies are `None`/empty.
+    *
+    *  - `op` / `ts`: operation name and monotonic wall-clock millis
+    *    (the DESCRIBE HISTORY surface).
+    *  - `dir`: the writer-unique snapshot dir the commit wrote into; a
+    *    body without one is incomplete.
+    *  - `txns`: writer-transaction watermarks (Delta's
+    *    `txnAppId`/`txnVersion` idempotence): appId → highest batch id
+    *    applied, carried forward commit-to-commit so a replayed
+    *    foreachBatch append is recognized and skipped.
+    *  - `rowHwm`: row-id high-water mark (row tracking) — every id below
+    *    it is spoken for, forever.
+    *  - `key`: the merge/delete key column a mutation recorded — what a
+    *    CDF export needs to replay the commit's row-level changes.
+    *  - `dataChange`: `Some(false)` marks a rearrangement (same logical
+    *    rows, different files); legacy bodies fall back to the op label
+    *    ([[isRearrangement]]).
+    *  - `schemaJson`: the schema the commit recorded (pre-schema-field
+    *    bodies: readers fall back to `_meta_schema.json`).
+    *  - `files`: the manifest in body order, keyed root-relative — a
+    *    legacy bare-name key is resolved against `dir` at decode time.
+    */
+  final case class Commit(version: Long, op: Option[String],
+                          ts: Option[Long], dir: String,
+                          txns: Map[String, Long] = Map.empty,
+                          rowHwm: Option[Long] = None,
+                          key: Option[String] = None,
+                          dataChange: Option[Boolean] = None,
+                          schemaJson: Option[String] = None,
+                          files: Seq[(String, FileStat)] = Nil) {
+    /** The recorded schema, parsed on first use (None when absent or
+      * unparseable — callers fall back to the head schema).
+      */
+    lazy val schema: Option[StructType] = schemaJson.flatMap(j =>
+      scala.util.Try(DataType.fromJson(j).asInstanceOf[StructType]).toOption)
+
+    /** `files` sorted by path — the order every manifest reader sees. */
+    lazy val manifest: Seq[(String, FileStat)] = files.sortBy(_._1)
+
+    /** dataChange=false (OPTIMIZE/compaction/purge), by the explicit
+      * flag, or by the op label for bodies written before the flag.
+      */
+    def isRearrangement: Boolean =
+      dataChange.map(!_).getOrElse(op.contains("OPTIMIZE"))
+
+    /** The body bytes' text. Field order is fixed and `files` is always
+      * LAST — [[CommitStream]] decodes the header before the manifest.
+      */
+    def encode: String = {
+      val out = new java.io.StringWriter()
+      val g = mapper.getFactory.createGenerator(out)
+      g.writeStartObject()
+      g.writeNumberField("version", version)
+      op.foreach(g.writeStringField("op", _))
+      ts.foreach(g.writeNumberField("ts", _))
+      g.writeStringField("dir", dir)
+      if (txns.nonEmpty) {
+        g.writeObjectFieldStart("txns")
+        txns.foreach { case (app, batch) => g.writeNumberField(app, batch) }
+        g.writeEndObject()
       }
-      val cols = f.objectNode()
-      fsStat.cols.foreach { case (c, cs) =>
-        val co = f.objectNode()
-        def put(key: String, v: Option[Any]): Unit = v.foreach {
-          case l: Long => co.put(key, l)
-          case d: Double => co.put(key, d)
-          case s: String => co.put(key, s)
-          case _ => ()
-        }
-        put("min", cs.min); put("max", cs.max)
-        cs.numNulls.foreach(co.put("nulls", _))
-        cols.replace(c, co)
-      }
-      fo.replace("cols", cols)
-      root.replace(file, fo)
+      rowHwm.foreach(g.writeNumberField("rowHwm", _))
+      key.foreach(g.writeStringField("key", _))
+      dataChange.foreach(g.writeBooleanField("dataChange", _))
+      schemaJson.foreach { s => g.writeFieldName("schema"); g.writeRawValue(s) }
+      g.writeObjectFieldStart("files")
+      files.foreach { case (rel, st) => g.writeFieldName(rel); writeFileStat(g, st) }
+      g.writeEndObject()
+      g.writeEndObject()
+      g.close()
+      out.toString
     }
-    root
   }
 
-  /** The snapshot dir name a commit body points to. */
-  def dirOf(body: String): Option[String] =
-    Option(mapper.readTree(body).get("dir")).map(_.asText)
-
-  /** The schema JSON a commit body embeds (absent in pre-schema-field
-    * commits, whose readers fall back to `_meta_schema.json`).
-    */
-  def schemaOf(body: String): Option[String] =
-    Option(mapper.readTree(body).get("schema")).map(_.toString)
-
-  /** Operation name / wall-clock millis newer commits embed (DESCRIBE
-    * HISTORY surface); absent in older commit bodies.
-    */
-  def opOf(body: String): Option[String] =
-    Option(mapper.readTree(body).get("op")).map(_.asText)
-
-  /** The commit's explicit dataChange marker (absent in legacy
-    * commits — callers fall back to the OPTIMIZE op-label heuristic
-    * there). `false` = a rearrangement: same logical rows, different
-    * files — CDF diffs and delta exports must not surface its
-    * add/removes as data.
-    */
-  def dcOf(body: String): Option[Boolean] =
-    Option(mapper.readTree(body).get("dataChange")).map(_.asBoolean)
-
-  /** The merge/delete KEY COLUMN a mutation commit recorded (absent in
-    * pre-key commits and key-less ops like OPTIMIZE) — what a CDF
-    * export needs to replay the commit's row-level changes.
-    */
-  def keyOf(body: String): Option[String] =
-    Option(mapper.readTree(body).get("key")).map(_.asText)
-
-  /** JSON string literal (quotes + escaping) via jackson. */
-  def quoteJson(s: String): String =
-    JsonNodeFactory.instance.textNode(s).toString
-
-  /** Writer-transaction watermarks the commit carries (Delta's
-    * `txnAppId`/`txnVersion` idempotence mechanism): appId → highest
-    * batch id applied. Carried forward commit-to-commit so a replayed
-    * foreachBatch append can be recognized and skipped.
-    */
-  def txnsOf(body: String): Map[String, Long] =
-    Option(mapper.readTree(body).get("txns")).filter(_.isObject)
-      .map(_.fields().asScala
-        .map(e => e.getKey -> e.getValue.asLong).toMap)
-      .getOrElse(Map.empty)
-
-  def txnsToJson(txns: Map[String, Long]): String = {
-    val o = JsonNodeFactory.instance.objectNode()
-    txns.foreach { case (k, v) => o.put(k, v) }
-    o.toString
+  object Commit {
+    /** Full decode: the header plus the drained manifest. Throws on a
+      * malformed or truncated body.
+      */
+    def decode(open: () => java.io.InputStream): Commit = {
+      val cs = new CommitStream(open)
+      try cs.header.copy(files = cs.files.toVector)
+      finally cs.close()
+    }
   }
 
-  def tsOf(body: String): Option[Long] =
-    Option(mapper.readTree(body).get("ts")).map(_.asLong)
+  private def writeFileStat(g: JsonGenerator, st: FileStat): Unit = {
+    g.writeStartObject()
+    g.writeNumberField("rows", st.rows)
+    st.bytes.foreach(g.writeNumberField("bytes", _))
+    st.mtime.foreach(g.writeNumberField("mtime", _))
+    st.baseRowId.foreach(g.writeNumberField("brid", _))
+    st.rowVer.foreach(g.writeNumberField("rcv", _))
+    st.dv.foreach { d =>
+      g.writeObjectFieldStart("dv")
+      g.writeStringField("st", d.st); g.writeStringField("d", d.d)
+      g.writeNumberField("off", d.off); g.writeNumberField("sz", d.sz)
+      g.writeNumberField("card", d.card)
+      g.writeEndObject()
+    }
+    g.writeObjectFieldStart("cols")
+    st.cols.foreach { case (c, cs) =>
+      g.writeObjectFieldStart(c)
+      def put(key: String, v: Option[Any]): Unit = v.foreach {
+        case l: Long => g.writeNumberField(key, l)
+        case d: Double => g.writeNumberField(key, d)
+        case s: String => g.writeStringField(key, s)
+        case _ => ()
+      }
+      put("min", cs.min); put("max", cs.max)
+      cs.numNulls.foreach(g.writeNumberField("nulls", _))
+      g.writeEndObject()
+    }
+    g.writeEndObject()
+    g.writeEndObject()
+  }
 
-  /** Row-id high-water mark a commit body carries (row tracking):
-    * every id below it is spoken for, forever — rewrites and deletes
-    * never lower it.
-    */
-  def rowHwmOf(body: String): Option[Long] =
-    Option(mapper.readTree(body).get("rowHwm")).map(_.asLong)
-
-  /** Streaming commit reader — the scale twin of [[fromJson]]. A 100 TB
-    * table's head manifest can reference 10⁶–10⁷ files; materializing
-    * that as a driver Map (fromJson) costs O(live files) resident
-    * objects before a single predicate prunes anything. This reader
-    * parses the commit body INCREMENTALLY off an InputStream: header
-    * fields (version/op/ts/dir/schema/txns) eagerly — they precede
-    * `files`, which [[graft.tables]] commit writers always emit LAST —
-    * and the per-file manifest as a one-shot iterator that holds
-    * exactly one entry at a time. A planner folding filters over the
-    * iterator retains only surviving files: driver peak is O(files the
-    * predicate can touch), not O(table). Value typing mirrors
-    * fromJson exactly (integral→Long, floating→Double, else text) so
-    * both paths feed [[canSkip]] the same compare domain.
+  /** The commit parser. A 100 TB table's head manifest can reference
+    * 10⁶–10⁷ files; materializing that as a driver collection costs
+    * O(live files) resident objects before a single predicate prunes
+    * anything. This reader parses the body INCREMENTALLY off an
+    * InputStream: the [[header]] eagerly — every field precedes
+    * `files`, which [[Commit.encode]] always emits LAST — and the
+    * per-file manifest as a one-shot iterator that holds exactly one
+    * entry at a time. A planner folding filters over the iterator
+    * retains only surviving files: driver peak is O(files the
+    * predicate can touch), not O(table). Values type as integral→Long,
+    * floating→Double, else text — the [[canSkip]] compare domain. A
+    * truncated body throws; the iterator ends only at the body's
+    * closing brace.
     */
   final class CommitStream(open: () => java.io.InputStream)
       extends AutoCloseable {
-    import com.fasterxml.jackson.core.{JsonParser, JsonToken}
-
-    private val parser: JsonParser = mapper.getFactory.createParser(open())
+    private val parser = mapper.getFactory.createParser(open())
     private var atFiles = false
     private var filesTaken = false
 
-    var dir: Option[String] = None
-    var schemaJson: Option[String] = None
-    var ts: Option[Long] = None
-    var op: Option[String] = None
+    private def truncated() =
+      new IllegalStateException("commit body is truncated")
 
-    // header parse: everything up to (and excluding) the files body.
-    // A malformed body throws out of the CONSTRUCTOR — close the
-    // parser (and its underlying stream) on the way out, since the
-    // caller never gets a reference to close()
-    try {
+    /** Every header field, `files` left empty — stream it via [[files]].
+      * A malformed body throws out of the CONSTRUCTOR — the parser (and
+      * its stream) is closed on the way out, since the caller never
+      * gets a reference to close().
+      */
+    val header: Commit =
+      try readHeader()
+      catch {
+        case e: Throwable =>
+          try parser.close() catch { case _: Throwable => () }
+          throw e
+      }
+
+    private def readHeader(): Commit = {
       if (parser.nextToken() != JsonToken.START_OBJECT)
         throw new IllegalStateException("commit body is not a JSON object")
-      var headerDone = false
-      while (!headerDone) {
-        parser.nextToken() match {
-          case JsonToken.FIELD_NAME => parser.currentName() match {
+      var version: Option[Long] = None
+      var op: Option[String] = None
+      var ts: Option[Long] = None
+      var dir: Option[String] = None
+      var txns = Map.empty[String, Long]
+      var rowHwm: Option[Long] = None
+      var key: Option[String] = None
+      var dataChange: Option[Boolean] = None
+      var schemaJson: Option[String] = None
+      var done = false
+      while (!done) parser.nextToken() match {
+        case JsonToken.FIELD_NAME =>
+          val name = parser.currentName()
+          val t = parser.nextToken()
+          name match {
             case "files" =>
-              if (parser.nextToken() != JsonToken.START_OBJECT)
+              if (t != JsonToken.START_OBJECT)
                 throw new IllegalStateException("files is not an object")
-              atFiles = true; headerDone = true
-            case "dir" => parser.nextToken(); dir = Some(parser.getText)
+              atFiles = true; done = true
+            case "version" => version = Some(parser.getLongValue)
+            case "op" => op = Some(parser.getText)
+            case "ts" => ts = Some(parser.getLongValue)
+            case "dir" => dir = Some(parser.getText)
+            case "txns" if t == JsonToken.START_OBJECT =>
+              while (parser.nextToken() == JsonToken.FIELD_NAME) {
+                val app = parser.currentName()
+                parser.nextToken()
+                txns += app -> parser.getLongValue
+              }
+            case "rowHwm" => rowHwm = Some(parser.getLongValue)
+            case "key" => key = Some(parser.getText)
+            case "dataChange" => dataChange = Some(parser.getBooleanValue)
             case "schema" =>
-              parser.nextToken()
               schemaJson = Some(mapper.readTree[JsonNode](parser).toString)
-            case "ts" => parser.nextToken(); ts = Some(parser.getLongValue)
-            case "op" => parser.nextToken(); op = Some(parser.getText)
-            case _ => parser.nextToken(); parser.skipChildren()
+            case _ => parser.skipChildren()
           }
-          case JsonToken.END_OBJECT | null => headerDone = true
-          case t => throw new IllegalStateException(s"unexpected token $t")
-        }
+        case JsonToken.END_OBJECT => done = true
+        case null => throw truncated()
+        case t => throw new IllegalStateException(s"unexpected token $t")
       }
-    } catch {
-      case e: Throwable =>
-        try parser.close() catch { case _: Throwable => () }
-        throw e
+      Commit(
+        version.getOrElse(throw new IllegalStateException(
+          "commit body has no version")),
+        op, ts,
+        dir.getOrElse(throw new IllegalStateException(
+          "commit body has no dir")),
+        txns, rowHwm, key, dataChange, schemaJson)
     }
 
-    /** The per-file manifest, streamed. One-shot: entries are produced
-      * straight off the parser, never retained here.
+    /** The per-file manifest, streamed, keys root-relative. One-shot:
+      * entries are produced straight off the parser, never retained.
       */
     def files: Iterator[(String, FileStat)] = {
       require(!filesTaken, "CommitStream.files is one-shot")
@@ -402,15 +452,24 @@ object FileStats {
         private var nextItem: (String, FileStat) = _
         private var done = false
         advance()
-        private def advance(): Unit = {
-          parser.nextToken() match {
-            case JsonToken.FIELD_NAME =>
-              val rel = parser.currentName()
-              if (parser.nextToken() != JsonToken.START_OBJECT)
-                throw new IllegalStateException(s"file $rel: not an object")
-              nextItem = rel -> readFileStat()
-            case _ => done = true; nextItem = null
-          }
+        private def advance(): Unit = parser.nextToken() match {
+          case JsonToken.FIELD_NAME =>
+            val k = parser.currentName()
+            if (parser.nextToken() != JsonToken.START_OBJECT)
+              throw new IllegalStateException(s"file $k: not an object")
+            val rel = if (k.contains('/')) k else s"${header.dir}/$k"
+            nextItem = rel -> readFileStat()
+          case JsonToken.END_OBJECT =>
+            // past the manifest: the body must still close cleanly
+            var end = false
+            while (!end) parser.nextToken() match {
+              case JsonToken.FIELD_NAME =>
+                parser.nextToken(); parser.skipChildren()
+              case JsonToken.END_OBJECT => end = true
+              case _ => throw truncated()
+            }
+            done = true; nextItem = null
+          case _ => throw truncated()
         }
         override def hasNext: Boolean = !done
         override def next(): (String, FileStat) = {
@@ -499,34 +558,6 @@ object FileStats {
     }
 
     override def close(): Unit = parser.close()
-  }
-
-  def fromJson(body: String): Map[String, FileStat] = {
-    val root = mapper.readTree(body)
-    val files = root.get("files")
-    if (files == null || !files.isObject) return Map.empty
-    files.fields().asScala.map { e =>
-      val fo = e.getValue
-      val cols = Option(fo.get("cols")).filter(_.isObject)
-        .map(_.fields().asScala.map { ce =>
-          val co = ce.getValue
-          def get(k: String): Option[Any] = Option(co.get(k)).map {
-            case n: JsonNode if n.isIntegralNumber => n.asLong: Any
-            case n: JsonNode if n.isFloatingPointNumber => n.asDouble: Any
-            case n: JsonNode => n.asText: Any
-          }
-          ce.getKey -> ColStats(get("min"), get("max"),
-            Option(co.get("nulls")).map(_.asLong))
-        }.toMap).getOrElse(Map.empty[String, ColStats])
-      val dv = Option(fo.get("dv")).filter(_.isObject).map(d =>
-        DvInfo(d.get("st").asText, d.get("d").asText,
-          d.get("off").asInt, d.get("sz").asInt, d.get("card").asLong))
-      e.getKey -> FileStat(fo.get("rows").asLong, cols,
-        Option(fo.get("bytes")).map(_.asLong),
-        Option(fo.get("mtime")).map(_.asLong), dv,
-        Option(fo.get("brid")).map(_.asLong),
-        Option(fo.get("rcv")).map(_.asLong))
-    }.toMap
   }
 
   // ---------------- predicate evaluation (skip decision) -------------

@@ -50,7 +50,11 @@ import java.nio.charset.StandardCharsets
   * files, because no two writers ever share a dir. Readers follow the
   * manifest of the highest commit — a consistent snapshot at all times,
   * no locks. Vacuum deletes files the current manifest does not
-  * reference once they age past retention.
+  * reference once they age past retention. The body format has ONE
+  * codec, [[FileStats.Commit]]: `encode` writes every body, the
+  * streaming [[FileStats.CommitStream]] parses every body, and every
+  * reader here goes through `commit(v)` (memoized, completeness-gated)
+  * or, for huge manifests, a stream of the same parser.
   *
   * At 100 TB this is the difference between O(batch ∩ table) and
   * O(table) of write amplification per micro-batch: an upsert whose
@@ -113,11 +117,8 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     * flag since round 14, with the op-label heuristic as the fallback
     * for commits written before the flag existed.
     */
-  private[tables] def isRearrangement(v: Long): Boolean = {
-    val body = commitBody(v)
-    FileStats.dcOf(body).map(!_).getOrElse(
-      FileStats.opOf(body).contains("OPTIMIZE"))
-  }
+  private[tables] def isRearrangement(v: Long): Boolean =
+    commit(v).isRearrangement
 
   /** Highest committed version. With a `_last_checkpoint` pointer the
     * lookup probes forward from the checkpointed version (O(commits
@@ -134,13 +135,20 @@ final class ResourceTable(val spark: SparkSession, val path: String,
         lastLookupCost = cost
         Some(cur)
       case _ => // no/corrupt/stale checkpoint: authoritative listing
-        val vs = fs.listStatus(logDir).map(_.getPath.getName)
-          .filter(_.endsWith(".commit"))
-          .map(n => n.stripSuffix(".commit").toLong)
+        val vs = loggedVersions()
         lastLookupCost = math.max(vs.length, 1)
-        if (vs.isEmpty) None else Some(vs.max)
+        vs.lastOption
     }
   }
+
+  /** Every version with a commit file in `_log`, ascending — the one
+    * listing of the log (O(#commits); [[latestVersion]] avoids it
+    * whenever a checkpoint hint exists).
+    */
+  private def loggedVersions(): Seq[Long] =
+    fs.listStatus(logDir).map(_.getPath.getName)
+      .filter(_.endsWith(".commit"))
+      .map(_.stripSuffix(".commit").toLong).sorted.toSeq
 
   private def checkpointHint(): Option[Long] =
     try {
@@ -162,179 +170,107 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     */
   def readVersion(v: Long): DataFrame = {
     // a commit body past this size is a huge manifest (≳100k files):
-    // plan it STREAMING — entries prune as they parse, survivors are
-    // the only driver-resident state — instead of materializing the
-    // whole file map (fromJson) first. Small manifests keep the eager
-    // path: its up-front missing-file check gives a better error than
-    // a mid-scan failure, and the body is already string-cached.
-    if (fs.getFileStatus(commitFile(v)).getLen > streamPlanBytes)
-      return readVersionStreaming(v)
+    // its entries come from a CommitStream reopened on every planning
+    // pass — entries prune as they parse, survivors are the only
+    // driver-resident state — instead of from the memoized commit's
+    // file list. Trade-offs of the streamed source, both deliberate: no
+    // up-front vacuumed-file check (a missing file fails at execution
+    // instead — an O(live files) check would defeat the point), and
+    // legacy pre-bytes manifest rows cost one status probe per planning
+    // pass instead of once.
+    val huge = fs.getFileStatus(commitFile(v)).getLen > streamPlanBytes
+    val c = if (huge) readCommit(v, withFiles = false) else commit(v)
     // the schema the COMMIT recorded, not the head's: after a RESTORE
     // to a pre-evolution version the head schema is narrower than a
     // later version's files, and reading v under it would silently
     // drop the evolved columns from a version that physically has
     // them (Delta's versionAsOf serves each version under its own
     // schema). Pre-schema-field commit bodies fall back to the head.
-    val vSchema = FileStats.schemaOf(commitBody(v))
-      .flatMap(j => scala.util.Try(
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[StructType]).toOption)
-      .getOrElse(schema())
-    val files = fileListAt(v)
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], vSchema)
-    if (missingFiles(files.map(_._1)).nonEmpty)
-      throw new IllegalStateException(
-        s"version $v of $path was vacuumed")
+    val vSchema = c.schema.getOrElse(schema())
+    // `fs` is a def that clones the Hadoop conf per call — hoist ONE
+    // FileSystem for the whole manifest (1M per-entry clones ≈ minutes)
+    val fsys = fs
     // plan through a StatsFileIndex over the COMMIT MANIFEST: file
-    // statuses come from the recorded per-file bytes (zero FS listing
-    // calls to plan — an explicit-path spark.read.parquet still stats
-    // every file), and any filter a caller composes later prunes
-    // whole files against the manifest's min/max/nullCount at plan
-    // time (stats, plus the bloom hook below). Legacy pre-bytes commits
-    // fall back to one status probe per file.
-    val entries = files.map { case (rel, st) =>
-      val p = fs.makeQualified(resolve(rel))
-      // manifest-recorded size AND mtime → zero status probes, and
-      // `_metadata.file_modification_time` is real, not epoch 0.
-      // Legacy pre-bytes/pre-mtime manifest rows: ONE probe fills both.
+    // statuses come from the recorded per-file bytes and mtime (zero FS
+    // listing calls to plan — an explicit-path spark.read.parquet still
+    // stats every file; `_metadata.file_modification_time` is real, not
+    // epoch 0), and any filter a caller composes later prunes whole
+    // files against the manifest's min/max/nullCount at plan time
+    // (stats, plus the bloom hook below). Legacy pre-bytes/pre-mtime
+    // manifest rows: ONE status probe fills both.
+    def entry(rel: String, st: FileStats.FileStat): StatsFileIndex.Entry = {
+      val p = fsys.makeQualified(resolve(rel))
       val (sz, mt) = (st.bytes, st.mtime) match {
         case (Some(b), Some(m)) => (b, m)
         case (b, m) =>
-          val fst = fs.getFileStatus(p)
+          val fst = fsys.getFileStatus(p)
           (b.getOrElse(fst.getLen), m.getOrElse(fst.getModificationTime))
       }
       StatsFileIndex.Entry(p, sz, mt, Some(st))
     }
+    val (index, dvFiles) =
+      if (!huge) {
+        val files = c.manifest
+        if (files.isEmpty)
+          return spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], vSchema)
+        if (missingFiles(files.map(_._1)).nonEmpty)
+          throw new IllegalStateException(
+            s"version $v of $path was vacuumed")
+        (new StatsFileIndex(new HPath(path),
+          files.map { case (rel, st) => entry(rel, st) }), files)
+      } else {
+        val cf = commitFile(v)
+        def entries(): Iterator[StatsFileIndex.Entry] = {
+          val cs = new FileStats.CommitStream(() => fsys.open(cf))
+          val underlying = cs.files.map { case (rel, st) => entry(rel, st) }
+          // planning passes drain the stream fully — close the parser
+          // (and its stream handle) at exhaustion instead of leaking it
+          new Iterator[StatsFileIndex.Entry] {
+            override def hasNext: Boolean = {
+              val h = underlying.hasNext
+              if (!h) cs.close()
+              h
+            }
+            override def next(): StatsFileIndex.Entry = underlying.next()
+          }
+        }
+        // DV pass: one extra stream retaining ONLY entries that carry a
+        // dv — O(#DV files) driver state, so the huge-manifest budget
+        // holds (deletes are recent and bounded; a manifest that is
+        // mostly DVs should be compacted)
+        val dvs = {
+          val cs = new FileStats.CommitStream(() => fsys.open(cf))
+          try cs.files.filter(_._2.dv.isDefined).toList
+          finally cs.close()
+        }
+        (StatsFileIndex.streaming(new HPath(path), () => entries()), dvs)
+      }
     // under column mapping the files store PHYSICAL names: scan
     // physical, alias back to this version's logical names after DV
     val vPhys = physSchema(vSchema)
     val undv = applyDv(spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        new StatsFileIndex(new HPath(path), entries)
-          .withExtraPrune(bloomPruneHook),
+        index.withExtraPrune(bloomPruneHook),
         StructType(Nil),
         StatsFileIndex.relaxNullability(vPhys).asInstanceOf[StructType],
         None,
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-        Map.empty)(spark)), files)
+        Map.empty)(spark)), dvFiles)
     if (vPhys == vSchema) undv
     else undv.select(vSchema.fields.map(f =>
       col(physName(f)).as(f.name, f.metadata)): _*)
   }
 
-  /** Manifest bodies above this size plan via [[readVersionStreaming]].
-    * 8 MiB ≈ 50–100k file entries — past the point where a resident
-    * file map is the dominant driver cost of planning a read.
-    * Overridable (spec hook) via `graft.manifest.streamPlanBytes` in
-    * the session conf.
+  /** Commit bodies above this size are read through a streamed
+    * manifest ([[readVersion]]). 8 MiB ≈ 50–100k file entries — past
+    * the point where a resident file map is the dominant driver cost of
+    * planning a read. Overridable (spec hook) via
+    * `graft.manifest.streamPlanBytes` in the session conf.
     */
   private def streamPlanBytes: Long =
     spark.conf.getOption("graft.manifest.streamPlanBytes")
       .map(_.toLong).getOrElse(8L * 1024 * 1024)
-
-  /** Snapshot planning for HUGE manifests: the commit body streams
-    * through [[FileStats.CommitStream]] on every planning pass, so the
-    * driver never holds the file map — [[StatsFileIndex]] prunes
-    * entries in flight and materializes survivors only (delta's
-    * TahoeLogFileIndex discipline). Trade-offs vs the eager path, both
-    * deliberate: no up-front vacuumed-file check (a missing file fails
-    * at execution instead — an O(live files) check would defeat the
-    * point), and legacy pre-bytes manifest rows cost one status probe
-    * per planning pass instead of once.
-    */
-  private def readVersionStreaming(v: Long): DataFrame = {
-    val cf = commitFile(v)
-    // completeness gate, same discipline as readCommitBody: writers
-    // write the body in one call and never touch it after close, so a
-    // body whose final byte is '}' is final. Bounded wait for an
-    // in-flight write to settle.
-    val deadline = System.nanoTime() + 5000L * 1000 * 1000
-    var settled = false
-    while (!settled) {
-      val len = fs.getFileStatus(cf).getLen
-      val in = fs.open(cf)
-      try {
-        in.seek(math.max(0L, len - 1))
-        settled = in.read() == '}'
-      } finally in.close()
-      if (!settled) {
-        if (System.nanoTime() > deadline)
-          throw new IllegalStateException(
-            s"commit $cf still unreadable at deadline " +
-              "(in-flight write should settle in ms)")
-        Thread.sleep(5)
-      }
-    }
-    val header = new FileStats.CommitStream(() => fs.open(cf))
-    val (dirName, vSchema) =
-      try {
-        val d = header.dir.getOrElse(throw new IllegalStateException(
-          s"corrupt commit $cf"))
-        val sch = header.schemaJson.flatMap(j => scala.util.Try(
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[StructType]).toOption)
-          .getOrElse(schema())
-        (d, sch)
-      } finally header.close()
-    // `fs` is a def that clones the Hadoop conf per call — hoist ONE
-    // FileSystem for the whole stream (1M per-entry clones ≈ minutes)
-    val fsys = fs
-    def entries(): Iterator[StatsFileIndex.Entry] = {
-      val cs = new FileStats.CommitStream(() => fsys.open(cf))
-      val underlying = cs.files.map { case (k, st) =>
-        val rel = if (k.contains('/')) k else s"$dirName/$k"
-        val p = fsys.makeQualified(resolve(rel))
-        val (sz, mt) = (st.bytes, st.mtime) match {
-          case (Some(b), Some(m)) => (b, m)
-          case (b, m) =>
-            val fst = fsys.getFileStatus(p)
-            (b.getOrElse(fst.getLen), m.getOrElse(fst.getModificationTime))
-        }
-        StatsFileIndex.Entry(p, sz, mt, Some(st))
-      }
-      // planning passes drain the stream fully — close the parser (and
-      // its stream handle) at exhaustion instead of leaking it to GC
-      new Iterator[StatsFileIndex.Entry] {
-        override def hasNext: Boolean = {
-          val h = underlying.hasNext
-          if (!h) cs.close()
-          h
-        }
-        override def next(): StatsFileIndex.Entry = underlying.next()
-      }
-    }
-    // under column mapping the files store PHYSICAL names: scan
-    // physical, alias back to logical after the DV pass
-    val vPhys = physSchema(vSchema)
-    val scan = spark.baseRelationToDataFrame(
-      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        StatsFileIndex.streaming(new HPath(path), () => entries())
-          .withExtraPrune(bloomPruneHook),
-        StructType(Nil),
-        StatsFileIndex.relaxNullability(vPhys).asInstanceOf[StructType],
-        None,
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-        Map.empty)(spark))
-    // DV pass: one extra stream over the body retaining ONLY entries
-    // that carry a dv — O(#DV files) driver state, so the streaming
-    // path keeps its huge-manifest budget (deletes are recent and
-    // bounded; a manifest that is mostly DVs should be compacted)
-    val dvFiles = {
-      val cs = new FileStats.CommitStream(() => fsys.open(cf))
-      try cs.files.collect {
-        case (k, st) if st.dv.isDefined =>
-          val rel = if (k.contains('/')) k else s"$dirName/$k"
-          rel -> st
-      }.toList
-      finally cs.close()
-    }
-    val undv = applyDv(scan, dvFiles)
-    if (vPhys == vSchema) undv
-    else undv.select(vSchema.fields.map(f =>
-      col(physName(f)).as(f.name, f.metadata)): _*)
-  }
 
   /** Version visible at `tsMs` — Delta `timestampAsOf` resolution: the
     * newest commit published at or before the timestamp. Walks the
@@ -342,14 +278,11 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     * one log listing. Legacy commits without a recorded timestamp are
     * skipped (conservative — never guess a publish time).
     */
-  def versionAsOf(tsMs: Long): Long = {
-    val vs = fs.listStatus(logDir).map(_.getPath.getName)
-      .filter(_.endsWith(".commit"))
-      .map(_.stripSuffix(".commit").toLong).sorted.reverse
-    vs.find(v => FileStats.tsOf(commitBody(v)).exists(_ <= tsMs))
+  def versionAsOf(tsMs: Long): Long =
+    loggedVersions().reverseIterator
+      .find(v => commit(v).ts.exists(_ <= tsMs))
       .getOrElse(throw new IllegalArgumentException(
         s"$path has no snapshot at or before timestamp $tsMs"))
-  }
 
   /** Delta `timestampAsOf` read: the table as of a wall-clock instant. */
   def readAsOf(tsMs: Long): DataFrame = readVersion(versionAsOf(tsMs))
@@ -365,15 +298,15 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     val cur = latestVersion.getOrElse(
       throw new IllegalStateException(s"no table at $path"))
     require(v <= cur, s"cannot restore $path to unknown version $v")
-    val files = fileListAt(v)
+    val target = commit(v)
+    val files = target.manifest
     val missing = missingFiles(files.map(_._1))
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"$path: version $v was vacuumed — cannot restore (missing " +
           s"${missing.take(3).mkString(", ")}" +
           (if (missing.size > 3) s" and ${missing.size - 3} more)" else ")"))
-    val schemaJson = FileStats.schemaOf(commitBody(v))
-      .getOrElse(schema().json)
+    val schemaJson = target.schemaJson.getOrElse(schema().json)
     commitFiles(None, files, schemaJson, Some(cur), op = "RESTORE",
       appendOnlyExempt = true)
   }
@@ -666,14 +599,14 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     if (!versionExists(v))
       throw new IllegalStateException(
         s"version $v of $path never existed")
-    val files = fileListAt(v)
+    val cloned = commit(v)
+    val files = cloned.manifest
     val gone = missingFiles(files.map(_._1))
     if (gone.nonEmpty)
       throw new IllegalStateException(
         s"$path: cannot clone version $v — ${gone.size} referenced " +
           s"file(s) vacuumed (first: ${gone.head})")
-    val schemaJson = FileStats.schemaOf(commitBody(v))
-      .getOrElse(schema().json)
+    val schemaJson = cloned.schemaJson.getOrElse(schema().json)
     // FULLY-QUALIFIED URIs (scheme + authority), not bare paths: a
     // bare `/table/snap-0/x.parquet` re-anchors against the TARGET's
     // scheme/authority at read time, silently pointing a cross-bucket
@@ -721,15 +654,14 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     }
     // version-0 commit: manifest only — no data directory is created
     // (the dir field names the slot commitFiles would have; the empty-
-    // snapshot fallback in snapshotLocation is the only reader of it)
-    val statsJson = FileStats.toJsonNode(absFiles.toMap).toString
-    // the row-id high-water mark travels like identity watermarks: a
+    // snapshot fallback in snapshotLocation is the only reader of it).
+    // The row-id high-water mark travels like identity watermarks: a
     // clone that restarted at 0 would hand new files id ranges the
     // cloned files already occupy
-    val rowJson = FileStats.rowHwmOf(commitBody(v))
-      .map(h => s""","rowHwm":$h""").getOrElse("")
-    val body =
-      s"""{"version":0,"op":"CLONE","ts":${System.currentTimeMillis()},"dir":"snap-0-clone"$rowJson,"schema":$schemaJson,"files":$statsJson}"""
+    val body = FileStats.Commit(0L, Some("CLONE"),
+      Some(System.currentTimeMillis()), "snap-0-clone",
+      rowHwm = cloned.rowHwm, schemaJson = Some(schemaJson),
+      files = absFiles.toMap.toSeq).encode
     tgt.publishExclusive(tgt.commitFile(0L),
       body.getBytes(StandardCharsets.UTF_8))
     tgt
@@ -943,44 +875,61 @@ final class ResourceTable(val spark: SparkSession, val path: String,
 
   // ---------------- manifest plumbing ---------------------------------
 
+  // Commits are immutable once complete, so the last decoded one is
+  // safe to memoize — fileListAt/schema/txn lookups on the same version
+  // (the common pattern within one mutation) cost one read and one
+  // decode total.
+  @volatile private var commitCache: (Long, FileStats.Commit) = (-1L, null)
+
+  /** Version `v`'s commit, decoded ([[FileStats.Commit]] — the one
+    * codec of the `_log` format).
+    */
+  private[tables] def commit(v: Long): FileStats.Commit = {
+    val cached = commitCache
+    if (cached._1 == v) return cached._2
+    val c = readCommit(v, withFiles = true)
+    commitCache = (v, c)
+    c
+  }
+
   /** A commit file becomes VISIBLE at its atomic create() — that is
     * the winner-election point — but its bytes land between create and
     * close. A reader that opens the file inside that window sees a
     * truncated body (or a checksum mismatch on ChecksumFileSystems).
-    * Writers never touch a commit after close, so the first
-    * well-formed read is final: retry the read until the body parses,
-    * bounded by a deadline that is orders of magnitude beyond the
-    * write window (commit bodies are a few KB written in one call).
+    * Writers never touch a commit after close, so the first COMPLETE
+    * read is final: the body decodes, has a `dir`, and ends in its
+    * closing brace. Retry until then, bounded by a deadline that is
+    * orders of magnitude beyond the write window (commit bodies are
+    * written in one call). `withFiles = false` decodes the header only
+    * (`files` stays empty) for the huge-manifest read, which streams
+    * the entries itself — the header cannot see a torn tail, so that
+    * decode first checks the body's final byte.
     */
-  // Commits are immutable once well-formed, so the last body read is
-  // safe to memoize — fileListAt/opOf/txn lookups on the same version
-  // (the common pattern within one mutation) cost one FS read total.
-  @volatile private var bodyCache: (Long, String) = (-1L, "")
-
-  private[tables] def commitBody(v: Long): String = {
-    val cached = bodyCache
-    if (cached._1 == v) return cached._2
-    val body = readCommitBody(v)
-    bodyCache = (v, body)
-    body
-  }
-
-  private def readCommitBody(v: Long): String = {
+  private def readCommit(v: Long, withFiles: Boolean): FileStats.Commit = {
     val cf = commitFile(v)
-    if (!fs.exists(cf))
+    val fsys = fs
+    if (!fsys.exists(cf))
       throw new IllegalStateException(
         s"version $v of $path never existed")
+    def closed: Boolean = {
+      val len = fsys.getFileStatus(cf).getLen
+      val in = fsys.open(cf)
+      try { in.seek(math.max(0L, len - 1)); in.read() == '}' }
+      finally in.close()
+    }
     val deadline = System.nanoTime() + 5000L * 1000 * 1000
     var last: Throwable = null
     while (true) {
+      // on file:// bodies publish by atomic hard link and can never be
+      // torn; the completeness check + retry loop remain for stores
+      // whose create-then-write election (HDFS-like) can expose an
+      // in-flight body to a fast reader
       try {
-        val body = readFile(cf)
-        // on file:// bodies publish by atomic hard link and can never
-        // be torn; the parse-and-complete check + retry loop remain
-        // for stores whose create-then-write election (HDFS-like) can
-        // expose an in-flight body to a fast reader
-        if (FileStats.dirOf(body).isDefined && body.trim.endsWith("}"))
-          return body
+        if (withFiles) return FileStats.Commit.decode(() => fsys.open(cf))
+        if (closed) {
+          val cs = new FileStats.CommitStream(() => fsys.open(cf))
+          try return cs.header finally cs.close()
+        }
         last = null
       } catch { case e: Throwable => last = e }
       if (System.nanoTime() > deadline)
@@ -992,20 +941,17 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     throw new IllegalStateException("unreachable")
   }
 
-  /** The version's data-file manifest: root-relative path → stats.
-    * Pre-file-granular commit bodies keyed files by bare name; those
-    * resolve against the commit's own `dir` field.
+  /** Commit `c`'s wall-clock time: its recorded `ts`, or — for bodies
+    * written before the field existed — its commit file's mtime.
     */
-  private[tables] def fileListAt(v: Long): Seq[(String, FileStats.FileStat)] = {
-    val body = commitBody(v)
-    val dir = FileStats.dirOf(body).getOrElse(
-      throw new IllegalStateException(s"corrupt commit ${commitFile(v)}"))
-    FileStats.fromJson(body).toSeq
-      .map { case (k, st) =>
-        (if (k.contains('/')) k else s"$dir/$k") -> st
-      }
-      .sortBy(_._1)
-  }
+  private[tables] def commitTs(c: FileStats.Commit): Long =
+    c.ts.getOrElse(fs.getFileStatus(commitFile(c.version)).getModificationTime)
+
+  /** The version's data-file manifest: root-relative path → stats,
+    * sorted by path.
+    */
+  private[tables] def fileListAt(v: Long): Seq[(String, FileStats.FileStat)] =
+    commit(v).manifest
 
   private[tables] def resolve(rel: String): HPath = new HPath(root, rel)
 
@@ -1072,7 +1018,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     dirs match {
       case Seq(d) => resolve(d).toString
       case Seq() => // empty snapshot: its own commit dir stands in
-        new HPath(root, FileStats.dirOf(commitBody(v)).get).toString
+        new HPath(root, commit(v).dir).toString
       case many => throw new IllegalStateException(
         s"version $v of $path spans ${many.size} directories; " +
           "run optimize() before registering an external location")
@@ -1085,13 +1031,10 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     * doesn't show); `_meta_schema.json` only serves pre-schema-field
     * commit logs and empty tables.
     */
-  def schema(): StructType = {
-    val fromCommit = latestVersion.flatMap(v =>
-      FileStats.schemaOf(commitBody(v)))
-    DataType.fromJson(fromCommit.getOrElse(
-        readFile(new HPath(root, "_meta_schema.json"))))
-      .asInstanceOf[StructType]
-  }
+  def schema(): StructType =
+    latestVersion.flatMap(v => commit(v).schema).getOrElse(
+      DataType.fromJson(readFile(new HPath(root, "_meta_schema.json")))
+        .asInstanceOf[StructType])
 
   def clusterBy(): Seq[String] = {
     val p = new HPath(root, "_meta_cluster.txt")
@@ -1898,7 +1841,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     * commit's carried watermark map.
     */
   def txnVersion(appId: String): Option[Long] =
-    latestVersion.flatMap(v => FileStats.txnsOf(commitBody(v)).get(appId))
+    latestVersion.flatMap(v => commit(v).txns.get(appId))
 
   /** Pure APPEND — the fact/event-table write path: the batch's rows
     * land as new files and every existing file carries forward by
@@ -1941,7 +1884,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
       val curV = cur.getOrElse(
         throw new IllegalStateException(s"no table at $path"))
       val replayed = txn.exists { case (app, batch) =>
-        FileStats.txnsOf(commitBody(curV)).get(app).exists(batch <= _)
+        commit(curV).txns.get(app).exists(batch <= _)
       }
       if (replayed) 0L
       else {
@@ -1997,7 +1940,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
       val curV = cur.getOrElse(
         throw new IllegalStateException(s"no table at $path"))
       val replayed = txn.exists { case (app, batch) =>
-        FileStats.txnsOf(commitBody(curV)).get(app).exists(batch <= _)
+        commit(curV).txns.get(app).exists(batch <= _)
       }
       if (replayed) 0L
       else {
@@ -2528,7 +2471,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
         val curV = cur.getOrElse(
           throw new IllegalStateException(s"no table at $path"))
         val replayed = txn.exists { case (app, batch) =>
-          FileStats.txnsOf(commitBody(curV)).get(app).exists(batch <= _)
+          commit(curV).txns.get(app).exists(batch <= _)
         }
         if (replayed) 0L
         else {
@@ -3040,7 +2983,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
             "_delta_log, and the export could not be brought current — " +
             "fix or remove the _delta_log directory first", e)
       }
-    val curDir = FileStats.dirOf(commitBody(cur)).getOrElse("")
+    val curDir = commit(cur).dir
     val cutoff = System.currentTimeMillis() - retentionMs
     var n = 0
     fs.listStatus(root)
@@ -3152,14 +3095,10 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     // (their write is best-effort), so the hint, not `cur`, is the
     // deletion ceiling.
     val ceiling = checkpointHint().getOrElse(Long.MaxValue)
-    val commits = fs.listStatus(logDir).map(_.getPath)
-      .filter(_.getName.endsWith(".commit"))
-      .map(p => p.getName.stripSuffix(".commit").toLong -> p)
-      .sortBy(_._1)
     var n = 0
-    commits.dropRight(keepLast).foreach { case (v, p) =>
+    loggedVersions().dropRight(keepLast).foreach { v =>
       if (v != cur && v < ceiling && !versionIntact(v)) {
-        fs.delete(p, false); n += 1
+        fs.delete(commitFile(v), false); n += 1
       }
     }
     n
@@ -3175,14 +3114,12 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     */
   def history(): DataFrame = {
     import spark.implicits._
-    val rows = fs.listStatus(logDir).map(_.getPath.getName)
-      .filter(_.endsWith(".commit"))
-      .map(_.stripSuffix(".commit").toLong).sorted.reverse.toSeq
+    val rows = loggedVersions().reverse
       .map { v =>
-        val body = commitBody(v)
-        val files = fileListAt(v)
-        (v, FileStats.tsOf(body).map(new java.sql.Timestamp(_)).orNull,
-          FileStats.opOf(body).orNull, files.size.toLong,
+        val c = commit(v)
+        val files = c.files
+        (v, c.ts.map(new java.sql.Timestamp(_)).orNull,
+          c.op.orNull, files.size.toLong,
           // LIVE rows (physical minus DV-dead), the same convention
           // as describeDetail/statsCount — reconciling the two
           // surfaces must not show phantom rows after a DV delete
@@ -3399,46 +3336,49 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     var curKept = keptFiles
     var curNext = next
     var rebasesLeft = 20 // bound: heavy contention falls back to re-run
-    // the commit body's manifest/txn JSON is computed BEFORE each
-    // election attempt so nothing lengthens the create-to-write
-    // window (a torn body wedges readers on the deadline spin)
+    // the commit body is encoded BEFORE each election attempt so
+    // nothing lengthens the create-to-write window (a torn body wedges
+    // readers on the deadline spin)
     val rowTracking = rowTrackingEnabled
-    def bodyJson(): (String, String, Long, String) = {
-      val parentBody = curExpected.map(commitBody)
+    def encodeBody(): Array[Byte] = {
+      val parent = curExpected.map(commit)
       // ROW TRACKING assignment happens HERE, inside the election
       // loop: the parent body's high-water mark is authoritative
       // because commits serialize on the O_EXCL create — no side
       // markers needed (unlike identity, which binds values to DATA
       // before the election). A rebase recomputes off the new head,
       // so concurrent writers' ranges can never collide.
-      val (outNew, rowJson) =
-        if (!rowTracking) (newStats, "")
+      val (outNew, rowHwm) =
+        if (!rowTracking) (newStats, None)
         else {
-          var hwm = parentBody.flatMap(FileStats.rowHwmOf).getOrElse(0L)
+          var hwm = parent.flatMap(_.rowHwm).getOrElse(0L)
           val assigned = newStats.sortBy(_._1).map { case (r, st) =>
             val b = hwm; hwm += st.rows
             r -> st.copy(baseRowId = Some(b), rowVer = Some(curNext))
           }
-          (assigned, s""","rowHwm":$hwm""")
+          (assigned, Some(hwm))
         }
-      val statsJson =
-        FileStats.toJsonNode((curKept ++ outNew).toMap).toString
-      // txn watermarks carry forward so any later commit can answer
-      // "has (appId, batchId) already been applied?" from the head alone
-      val txns = parentBody.map(FileStats.txnsOf)
-        .getOrElse(Map.empty) ++ txn
-      val txnsJson =
-        if (txns.isEmpty) ""
-        else s""","txns":${FileStats.txnsToJson(txns)}"""
       // MONOTONIC commit timestamp (Delta's in-commit-timestamp
       // contract): never behind the parent's — clock skew between
       // writers must not reorder history, or versionAsOf's
       // newest-first scan would resolve the wrong snapshot
       val ts = math.max(System.currentTimeMillis(),
-        parentBody.flatMap(FileStats.tsOf).getOrElse(0L) + 1)
-      (statsJson, txnsJson, ts, rowJson)
+        parent.flatMap(_.ts).getOrElse(0L) + 1)
+      FileStats.Commit(curNext, Some(op), Some(ts), dirName,
+        // txn watermarks carry forward so any later commit can answer
+        // "has (appId, batchId) already been applied?" from the head
+        // alone
+        txns = parent.map(_.txns).getOrElse(Map.empty) ++ txn,
+        rowHwm = rowHwm,
+        // `key` records the mutation's merge/delete key so a later CDF
+        // export can replay this commit's row-level changes
+        key = key,
+        dataChange = if (dataChange) None else Some(false),
+        schemaJson = Some(schemaJson),
+        files = (curKept ++ outNew).toMap.toSeq)
+        .encode.getBytes(StandardCharsets.UTF_8)
     }
-    var (statsJson, txnsJson, tsVal, rowJson) = bodyJson()
+    var body = encodeBody()
     def loseAndThrow(cause: Throwable): Nothing = {
       fs.delete(dir, true)
       BloomIndex.deleteSidecar(fs, root, dirName)
@@ -3467,18 +3407,10 @@ final class ResourceTable(val spark: SparkSession, val path: String,
         }
       }
     checkAppendOnly()
-    // `key` records the mutation's merge/delete key so a later CDF
-    // export can replay this commit's row-level changes (the column
-    // name is tiny, deterministic metadata — like op/txns)
-    val keyJson = key.map(k =>
-      s""","key":${FileStats.quoteJson(k)}""").getOrElse("")
-    val dcJson = if (dataChange) "" else ""","dataChange":false"""
     var published = false
     while (!published) {
       try {
-        publishExclusive(commitFile(curNext),
-          s"""{"version":$curNext,"op":"$op","ts":$tsVal,"dir":"$dirName"$txnsJson$rowJson$keyJson$dcJson,"schema":$schemaJson,"files":$statsJson}"""
-            .getBytes(StandardCharsets.UTF_8))
+        publishExclusive(commitFile(curNext), body)
         published = true
       } catch {
         // lost the race: rebase if the spec allows, else remove this
@@ -3496,24 +3428,23 @@ final class ResourceTable(val spark: SparkSession, val path: String,
           rebasesLeft -= 1
           val head = latestVersion.getOrElse(loseAndThrow(e))
           if (head < curNext) loseAndThrow(e)
-          val baseV = expectedCurrent.get
-          val headBody = readCommitBody(head)
+          // base first: the head stays memoized for the re-anchor
+          val baseSchema = commit(expectedCurrent.get).schemaJson
+          val headC = commit(head)
           // winner changed the schema → our projection/scope may be
           // stale in ways file stats can't arbitrate
-          if (FileStats.schemaOf(headBody) !=
-              FileStats.schemaOf(readCommitBody(baseV)))
-            loseAndThrow(e)
+          if (headC.schemaJson != baseSchema) loseAndThrow(e)
           // winner advanced our own appId's watermark → this batch
           // may already be applied; the operation's own replay check
           // must re-decide
           if (txn.exists { case (app, b) =>
-                FileStats.txnsOf(headBody).get(app).exists(b <= _) })
+                headC.txns.get(app).exists(b <= _) })
             loseAndThrow(e)
           def ident(f: (String, FileStats.FileStat)) = (f._1, f._2.dv)
           val baseIdents = rb.baseFiles.map(ident).toSet
           val keptIdents = keptFiles.map(ident).toSet
           val removedIdents = baseIdents -- keptIdents
-          val headFiles = fileListAt(head)
+          val headFiles = headC.files
           val headIdents = headFiles.map(ident).toSet
           // write-set check: every file this commit rewrites/removes
           // must be untouched at the head (same path AND same DV)
@@ -3536,11 +3467,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
             keptFiles.filterNot(f => baseIdents(ident(f)))
           curExpected = Some(head)
           curNext = head + 1
-          val refreshed = bodyJson()
-          statsJson = refreshed._1
-          txnsJson = refreshed._2
-          tsVal = refreshed._3
-          rowJson = refreshed._4
+          body = encodeBody()
           checkAppendOnly()
         case e: Throwable =>
           fs.delete(dir, true)
@@ -3620,7 +3547,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     * no commit or a complete one. The previous create-then-write
     * publish could tear: a SIGKILL between the output stream's buffer
     * flushes left a truncated HEAD commit that wedged every later
-    * reader and writer (readCommitBody deadline-spins — caught by
+    * reader and writer (readCommit deadline-spins — caught by
     * KillRecoverySpec at exactly the 16 KiB buffer boundary once
     * manifests outgrew one flush). Elsewhere (HDFS-like stores)
     * create(overwrite=false) is atomic at the store and remains the

@@ -33,11 +33,14 @@ import scala.util.control.NonFatal
   * iterator, pruned AS THEY STREAM, and only survivors are ever
   * materialized (the delta TahoeLogFileIndex discipline — prune
   * against the log before building file entries, never after). The
-  * eager constructors wrap an in-memory Seq (fine to ~10⁶ files, the
-  * InMemoryFileIndex shape); [[StatsFileIndex.streaming]] plugs a
-  * commit-manifest [[FileStats.CommitStream]] in directly, so
-  * planning a filtered read over a 10⁷-file manifest retains O(files
-  * the predicate touches), not O(table).
+  * Seq constructors wrap an in-memory file list (fine to ~10⁶ files,
+  * the InMemoryFileIndex shape) — [[ResourceTable.readVersion]] hands
+  * them the memoized commit's manifest. [[StatsFileIndex.streaming]]
+  * takes a source that re-opens a [[FileStats.CommitStream]] (the same
+  * commit parser) on every planning pass — readVersion's choice for a
+  * body past `graft.manifest.streamPlanBytes` — so planning a filtered
+  * read over a 10⁷-file manifest retains O(files the predicate
+  * touches), not O(table).
   */
 final class StatsFileIndex private (
     root: HPath,

@@ -192,10 +192,7 @@ class ConcurrentDmlFuzzSpec extends SparkSpec {
     * the new version and look uncontended) — a lower bound on races.
     */
   private def rebasedVersions(t: ResourceTable, from: Long, to: Long): Int =
-    (from to to).count { v =>
-      """"dir":"snap-(\d+)-""".r.findFirstMatchIn(t.commitBody(v))
-        .exists(_.group(1).toLong < v)
-    }
+    (from to to).count(v => t.commit(v).dir.split('-')(1).toLong < v)
 
   test(s"$nSeqs seeded concurrent multi-writer DML races linearize " +
       "and match the model") {

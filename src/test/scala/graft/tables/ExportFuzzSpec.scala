@@ -308,9 +308,38 @@ class ExportFuzzSpec extends SparkSpec {
       StandardCharsets.UTF_8)
     proc.waitFor()
     assert(proc.exitValue() == 0,
-      s"python reader failed:\n${out.linesIterator.filter(l =>
-        l.contains("FAIL") || l.contains("ok /")).mkString("\n")}")
+      s"python reader failed:\n${ExportFuzzSpec.failureReport(out)}")
     assert(out.contains(s"$trials ok / 0 fail"), out.linesIterator
       .filter(_.contains("ok /")).mkString("\n"))
+  }
+
+  test("failure report carries each failing table's full check log") {
+    val out = Seq("FUZZ-OK   /t/a", "FUZZ-FAIL /t/b: exit 1",
+      "snapshot: 3 rows MATCH", "ckpt-meta v10: MISMATCH schemaString",
+      "FUZZ-OK   /t/c", "FUZZ-FAIL /t/d: KeyError: 'add'",
+      "replayed 4 entries", "2 ok / 2 fail of 4 exports").mkString("\n")
+    assert(ExportFuzzSpec.failureReport(out) == Seq(
+      "FUZZ-FAIL /t/b: exit 1", "snapshot: 3 rows MATCH",
+      "ckpt-meta v10: MISMATCH schemaString",
+      "FUZZ-FAIL /t/d: KeyError: 'add'", "replayed 4 entries",
+      "2 ok / 2 fail of 4 exports").mkString("\n"))
+  }
+}
+
+object ExportFuzzSpec {
+  private val Summary = """\d+ ok / \d+ fail.*""".r
+
+  /** The checker output reduced to every failing table's full log —
+    * its `FUZZ-FAIL` line and each line up to the next `FUZZ-` line —
+    * plus the summary line. The reason a table failed (a `MISMATCH`
+    * line, a replay error) follows its `FUZZ-FAIL` line, not on it.
+    */
+  def failureReport(out: String): String = {
+    var inFail = false
+    out.linesIterator.filter { l =>
+      if (l.startsWith("FUZZ-")) inFail = l.startsWith("FUZZ-FAIL")
+      else if (Summary.matches(l)) inFail = true
+      inFail
+    }.mkString("\n")
   }
 }

@@ -30,12 +30,9 @@ class OccRebaseSpec extends AnyFunSuite {
     ResourceTable(spark, s"${SparkSpec.tmpDir(name)}/T.parquet")
       .createIfNotExists(schema)
 
-  /** dir-prefix version recorded in commit v's body. */
-  private def dirVersion(t: ResourceTable, v: Long): Long = {
-    val body = t.commitBody(v)
-    val m = """"dir":"snap-(\d+)-""".r.findFirstMatchIn(body)
-    m.get.group(1).toLong
-  }
+  /** dir-prefix version recorded in commit v (`snap-<v>-<uuid>`). */
+  private def dirVersion(t: ResourceTable, v: Long): Long =
+    t.commit(v).dir.split('-')(1).toLong
 
   test("disjoint upsert REBASES: files written once, re-anchored on the new head") {
     val t = newTable("occ1")

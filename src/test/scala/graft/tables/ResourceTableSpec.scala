@@ -264,7 +264,7 @@ class ResourceTableSpec extends SparkSpec {
     // max(parent+1, now) rule; versionAsOf depends on strict order
     (1 to 4).foreach(i => t.upsert(df(s"k$i" -> i), "id"))
     val ts = (0L to t.latestVersion.get)
-      .map(v => FileStats.tsOf(t.commitBody(v)).get)
+      .map(v => t.commit(v).ts.get)
     assert(ts == ts.sorted && ts.distinct.size == ts.size,
       s"not strictly increasing: $ts")
   }
