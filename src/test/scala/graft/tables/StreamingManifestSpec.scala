@@ -216,4 +216,25 @@ class StreamingManifestSpec extends SparkSpec {
     assert(t.commit(v) == decode(raw))
     assert(t.commit(v).encode == raw)
   }
+
+  // the streamed reader against the whole-body decode of the same file
+  test("CommitStream header and entries mirror fromJson on a real commit") {
+    val t = ResourceTable(spark, s"${tmpDir("smcs")}/T.parquet")
+      .createIfNotExists(tableSchema)
+    t.upsert(spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row("a", 1), Row("b", 2))),
+      tableSchema), "id")
+    val v = t.latestVersion.get
+    val cf = new HPath(s"${t.path}/_log", f"$v%020d.commit")
+    val fs = cf.getFileSystem(spark.sessionState.newHadoopConf())
+    val eager = FileStats.Commit.decode(() => fs.open(cf))
+    assert(eager.files.nonEmpty)
+    val cs = new FileStats.CommitStream(() => fs.open(cf))
+    try {
+      assert(cs.header == eager.copy(files = Nil))
+      assert(cs.header.dir == eager.dir && cs.header.op == eager.op &&
+        cs.header.ts == eager.ts && cs.header.schemaJson == eager.schemaJson)
+      assert(cs.files.toSeq == eager.files)
+    } finally cs.close()
+  }
 }
