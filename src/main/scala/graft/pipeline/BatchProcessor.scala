@@ -9,17 +9,28 @@ import org.apache.spark.sql.functions._
   * (bzkf/fhir-to-lakehouse src/bundle_processor.py:79–155) re-expressed
   * Spark-first:
   *
-  *   count → isEmpty gate → distinct resource types (driver list) →
-  *   per type: filter → latest-wins dedup (W1) → PUT rows → encode (E1)
-  *   → create-if-not-exists (S3) → MERGE upsert (J1) → DELETE rows →
-  *   MERGE delete (J2) → every `upkeepInterval` batches OPTIMIZE+VACUUM
-  *   (J3/J4; batch 0 triggers it, as in the reference — tests rely on
-  *   `batch_id % interval == 0`).
+  *   (type, method) counts → isEmpty gate → distinct resource types
+  *   (driver list) → per type: filter → latest-wins dedup (W1) → PUT
+  *   rows → encode (E1) → create-if-not-exists (S3) → MERGE upsert (J1)
+  *   → DELETE rows → MERGE delete (J2) → every `upkeepInterval`
+  *   batches OPTIMIZE+VACUUM (J3/J4; batch 0 triggers it, as in the
+  *   reference — tests rely on `batch_id % interval == 0`).
   *
-  * The only driver-side materialization is the distinct resource-type
-  * list (a handful of strings per batch, same as the reference's
+  * The only driver-side materialization is the per-(type, method)
+  * count list (a handful of rows per batch, same as the reference's
   * `.distinct().collect()` at bundle_processor.py:96–99); all row
   * processing is distributed.
+  *
+  * Materialize once: the prepared batch is persisted ONCE, and every
+  * stage below it (dedup → encode → write) stays one lazy plan. Two
+  * reasons. Adaptive execution sizes a write only through a shuffle
+  * it can coalesce, so a 130-row type lands as one file instead of
+  * `spark.sql.shuffle.partitions` small ones. And a cached plan that
+  * holds an exchange freezes its output at `shuffle.partitions`
+  * partitions (`canChangeCachedPlanOutputPartitioning` is false),
+  * which a per-type `cache()` of the dedup would bring back: every
+  * insert then commits that many small files, and upkeep reads them
+  * back to rewrite them as one.
   */
 final class BatchProcessor(
     tableDir: String,
@@ -51,9 +62,11 @@ final class BatchProcessor(
     * counts.
     */
   def processBatch(df: DataFrame, batchId: Long): Map[String, (Long, Long)] = {
-    // One cached pass serves the A1/A2/A3 driver actions and the
+    // The batch's ONE materialization: it serves the counts job and the
     // per-type filters below; without it every action re-executes the
     // upstream prepare pipeline (source decode + from_json + explode).
+    // Nothing downstream caches again (see the class comment): dedup →
+    // encode → write stays lazy so adaptive execution sizes the files.
     df.persist()
     try processCached(df, batchId) finally df.unpersist()
   }
@@ -61,97 +74,102 @@ final class BatchProcessor(
   private def processCached(
       df: DataFrame, batchId: Long): Map[String, (Long, Long)] = {
     val spark = df.sparkSession
-    // A1 + A2 + A3 in ONE job over the cache: per-type counts give the
-    // total row count (empty gate) and the distinct type list (driver
-    // side, a handful of rows) without a second scan.
-    val typeCounts = df.groupBy("resource_type").count().collect()
-      .map(r => Option(r.getString(0)) -> r.getLong(1))
-    val batchRows = typeCounts.map(_._2).sum
+    // A1 + A2 + A3 in ONE job over the cache: per-(type, method)
+    // counts give the total row count (empty gate), the distinct type
+    // list and which types carry DELETEs, without a second scan.
+    // Dedup only drops rows, so a type with no DELETE row before
+    // dedup has none after it and skips the delete branch job-free.
+    val counts = df.groupBy("resource_type", "request_method").count()
+      .collect()
+      .map(r => (Option(r.getString(0)), r.getString(1)) -> r.getLong(2))
+    val batchRows = counts.map(_._2).sum
     if (batchRows == 0) return Map.empty
     metrics.batchSize(batchRows)
-    val types = typeCounts.flatMap(_._1)
+    val types = counts.flatMap(_._1._1).distinct
+    val withDeletes =
+      counts.collect { case ((Some(rt), "DELETE"), _) => rt }.toSet
 
     types.map { rt =>
       val forType = df.filter(col("resource_type") === rt) // P9
       val deduped = BundlePipeline.deduplicate(forType)    // W1
-      deduped.cache()
-      try {
-        // A4 — opt-in per-topic counts, computed per type on the
-        // post-dedup rows like the reference's only_latest_df logging
-        // (bundle_processor.py:131), not on the raw batch
-        if (logTopicCounts)
-          deduped.groupBy(col("topic")).count().collect().foreach { r =>
-            metrics.topicCount(r.getAs[String]("topic"), r.getAs[Long]("count"))
-          }
-
-        val putDf = deduped.filter(col("request_method") === "PUT")
-        val encoded = FhirEncoder.encode(putDf, rt)        // E1
-
-        val table = ResourceTable(spark, tablePath(rt), checkpointInterval,
-            optimizeWrite, autoCompact)
-          .createIfNotExists(encoded.schema,
-            clusteringColumns.getOrElse(rt, Seq.empty))    // S3
-
-        val upserted = timeIt(metrics.mergeSeconds) {
-          table.upsert(encoded, "id")                      // J1
-        }
-        metrics.resourcesWritten(rt, upserted)
-
-        val deleteIds = deduped
-          .filter(col("request_method") === "DELETE")      // P9
-          .select("request_resource_id")
-        val deleted =
-          if (deleteIds.isEmpty) 0L
-          else timeIt(metrics.deleteSeconds) {
-            table.deleteMatching(deleteIds, "id")          // J2
-          }
-        metrics.resourcesDeleted(rt, deleted)
-
-        if (upkeepInterval > 0 && batchId % upkeepInterval == 0) {
-          timeIt(metrics.upkeepSeconds) {
-            // J3 — Delta OPTIMIZE parity: routine upkeep bin-packs
-            // only small files (O(small), no-op when nothing to do);
-            // a CLUSTERED table reclusters fully, like OPTIMIZE on
-            // liquid-clustering tables. A fixed full rewrite every 50
-            // batches would be O(table) write amplification at scale.
-            if (clusteringColumns.getOrElse(rt, Seq.empty).nonEmpty)
-              table.optimize()
-            else table.compactSmallFiles()
-            table.vacuum(vacuumRetentionMs)                // J4
-          }
+      // A4 — opt-in per-topic counts, computed per type on the
+      // post-dedup rows like the reference's only_latest_df logging
+      // (bundle_processor.py:131), not on the raw batch
+      if (logTopicCounts)
+        deduped.groupBy(col("topic")).count().collect().foreach { r =>
+          metrics.topicCount(r.getAs[String]("topic"), r.getAs[Long]("count"))
         }
 
-        // S6 in-engine: roll the catalog entry forward to this batch's
-        // snapshot (after upkeep, so it reflects any compaction). The
-        // reference registers per batch under metastore_url with the
-        // same retry wrapper (bundle_processor.py:212–217, :325–329);
-        // its Delta pointer is static where ours advances, so ours
-        // registers after the merge instead of before it — and because
-        // the data is already durably committed by then, a registration
-        // failure must not crash-loop the stream over a catalog entry:
-        // warn loudly and let the next batch (or the CLI) retry.
-        if (registerTables)
-          try ResourceTable.retry() {
-            Lakehousekeeper.registerTable(spark, tablePath(rt)): Unit
-          } catch {
-            // NonFatal only: an interrupt (query stop) or OOM must
-            // propagate, not be logged-and-continued
-            case scala.util.control.NonFatal(e) => System.err.println(
-              s"catalog registration failed for ${tablePath(rt)} " +
-                s"(data committed, entry stale): ${e.getMessage}")
-          }
-        // same durability stance as registration: the data is already
-        // committed, so a failed log mirror must not crash-loop the
-        // stream — warn and let the next batch (or the CLI) catch up
-        if (deltaExport)
-          try DeltaExport.export(table): Unit
-          catch {
-            case scala.util.control.NonFatal(e) => System.err.println(
-              s"delta export failed for ${tablePath(rt)} " +
-                s"(data committed, exported log stale): ${e.getMessage}")
-          }
-        rt -> (upserted, deleted)
-      } finally deduped.unpersist()
+      val putDf = deduped.filter(col("request_method") === "PUT")
+      val encoded = FhirEncoder.encode(putDf, rt)          // E1
+
+      val table = ResourceTable(spark, tablePath(rt), checkpointInterval,
+          optimizeWrite, autoCompact)
+        .createIfNotExists(encoded.schema,
+          clusteringColumns.getOrElse(rt, Seq.empty))      // S3
+
+      val upserted = timeIt(metrics.mergeSeconds) {
+        table.upsert(encoded, "id")                        // J1
+      }
+      metrics.resourcesWritten(rt, upserted)
+
+      // re-derived from the persisted batch; the plan prunes it to the
+      // dedup's columns plus the id. A type whose DELETEs all lost to a
+      // newer PUT passes an empty id set, which commits a copy-forward
+      // version like any unmatched delete.
+      val deleted =
+        if (!withDeletes(rt)) 0L
+        else timeIt(metrics.deleteSeconds) {
+          table.deleteMatching(deduped
+            .filter(col("request_method") === "DELETE")    // P9
+            .select("request_resource_id"), "id")          // J2
+        }
+      metrics.resourcesDeleted(rt, deleted)
+
+      if (upkeepInterval > 0 && batchId % upkeepInterval == 0) {
+        timeIt(metrics.upkeepSeconds) {
+          // J3 — Delta OPTIMIZE parity: routine upkeep bin-packs
+          // only small files (O(small), no-op when nothing to do);
+          // a CLUSTERED table reclusters fully, like OPTIMIZE on
+          // liquid-clustering tables. A fixed full rewrite every 50
+          // batches would be O(table) write amplification at scale.
+          if (clusteringColumns.getOrElse(rt, Seq.empty).nonEmpty)
+            table.optimize()
+          else table.compactSmallFiles()
+          table.vacuum(vacuumRetentionMs)                  // J4
+        }
+      }
+
+      // S6 in-engine: roll the catalog entry forward to this batch's
+      // snapshot (after upkeep, so it reflects any compaction). The
+      // reference registers per batch under metastore_url with the
+      // same retry wrapper (bundle_processor.py:212–217, :325–329);
+      // its Delta pointer is static where ours advances, so ours
+      // registers after the merge instead of before it — and because
+      // the data is already durably committed by then, a registration
+      // failure must not crash-loop the stream over a catalog entry:
+      // warn loudly and let the next batch (or the CLI) retry.
+      if (registerTables)
+        try ResourceTable.retry() {
+          Lakehousekeeper.registerTable(spark, tablePath(rt)): Unit
+        } catch {
+          // NonFatal only: an interrupt (query stop) or OOM must
+          // propagate, not be logged-and-continued
+          case scala.util.control.NonFatal(e) => System.err.println(
+            s"catalog registration failed for ${tablePath(rt)} " +
+              s"(data committed, entry stale): ${e.getMessage}")
+        }
+      // same durability stance as registration: the data is already
+      // committed, so a failed log mirror must not crash-loop the
+      // stream — warn and let the next batch (or the CLI) catch up
+      if (deltaExport)
+        try DeltaExport.export(table): Unit
+        catch {
+          case scala.util.control.NonFatal(e) => System.err.println(
+            s"delta export failed for ${tablePath(rt)} " +
+              s"(data committed, exported log stale): ${e.getMessage}")
+        }
+      rt -> (upserted, deleted)
     }.toMap
   }
 

@@ -1552,8 +1552,9 @@ final class ResourceTable(val spark: SparkSession, val path: String,
   /** Abort (before anything is written) if `src` contains rows that
     * violate any CHECK constraint — the upsert-side enforcement.
     */
-  private def enforceConstraints(src: DataFrame): Unit = {
-    val bad = violations(src, checkConstraints())
+  private def enforceConstraints(src: DataFrame,
+      cs: Map[String, String] = checkConstraints()): Unit = {
+    val bad = violations(src, cs)
     if (bad.nonEmpty)
       throw new IllegalArgumentException(
         s"CHECK constraint violation writing to $path: " +
@@ -1753,16 +1754,30 @@ final class ResourceTable(val spark: SparkSession, val path: String,
     */
   def upsert(source: DataFrame, key: String,
              mergeSchema: Boolean = false): Long = {
-    // the source is a bounded micro-batch (maxOffsetsPerTrigger); cache
-    // it so the pruning stats, the anti-join probe side, the union
-    // side, and the returned count are one computation, not several
-    val src = applyGenerated(applyIdentity(applyDefaults(source))).cache()
+    val conformed = applyGenerated(applyIdentity(applyDefaults(source)))
+    // Cache the source only where it is read more than once. A table
+    // that holds rows takes the merge branch, whose pruning stats, the
+    // anti-join probe side and the union side all read it; CHECK
+    // constraints (and optimizedWrite's sizing count) add a read
+    // before the write. The insert into an empty table reads it once,
+    // in the write job, and runs uncached: a cached plan that holds
+    // the caller's shuffle (BatchProcessor's dedup) would freeze its
+    // output at `shuffle.partitions` partitions and so commit that
+    // many small files, where the lazy plan lets adaptive execution
+    // coalesce them. Decided from the head before retry(): if a racing
+    // writer fills the table first, the merge branch re-reads the
+    // uncached source — still correct, only slower.
+    val constraints = checkConstraints()
+    val rereads = constraints.nonEmpty || optimizeWriteEnabled ||
+      latestVersion.exists(v => fileListAt(v).exists(_._2.rows > 0))
+    val src = if (rereads) conformed.cache() else conformed
     // CHECK constraints gate the batch BEFORE anything is written (one
     // aggregate over the bounded batch, all constraints at once);
     // deletes can't introduce violations, so only the upsert pays
     // this — and a violation runs once, never burning the retry budget
-    try enforceConstraints(src)
-    catch { case e: Throwable => src.unpersist(); throw e }
+    def release(): Unit = if (rereads) src.unpersist(): Unit
+    try enforceConstraints(src, constraints)
+    catch { case e: Throwable => release(); throw e }
     val result = try retry() {
       val cur = latestVersion
       val curV = cur.getOrElse(
@@ -1831,7 +1846,7 @@ final class ResourceTable(val spark: SparkSession, val path: String,
             (adds, _) => adds.exists(f => mayOverlap(f._2)))))
         srcRows
       }
-    } finally src.unpersist()
+    } finally release()
     maybeAutoCompact()
     result
   }

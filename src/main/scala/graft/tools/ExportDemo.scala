@@ -6,13 +6,19 @@ import org.apache.spark.sql.functions._
 
 /** Builds a demo table with a non-trivial history — upserts, a
   * mergeSchema evolution, a delete, idempotent txn appends, enough
-  * commits to trigger a delta checkpoint, then log cleanup — exports
-  * its `_delta_log`, and dumps the EXPECTED current snapshot as plain
+  * commits to trigger a delta checkpoint — exports its `_delta_log`
+  * with change data, and dumps the EXPECTED current snapshot as plain
   * parquet. `tools/check_delta_export.py` then replays the exported
   * log with an INDEPENDENT reader (DuckDB + the json/parquet files
   * directly, zero graft code) and hash-compares: the external-reader
   * proof the in-repo `DeltaExport.readSnapshot` round trip cannot
   * give by itself.
+  *
+  * The reader replays the newest checkpoint plus the json tail. The
+  * demo runs no log cleanup, so the json chain from version 0
+  * survives: the checker also compares the checkpoint's metaData with
+  * the json log and replays every change-data commit. Cleanup's own
+  * trimming is pinned by DeltaExportSpec and CdfExportSpec.
   *
   * Usage: runMain graft.tools.ExportDemo <outDir> [sfDir] [v2]
   * A third arg of `v2` exports V2 (uuid-manifest + sidecar)
@@ -38,11 +44,12 @@ object ExportDemo {
         col("c_acctbal"), col("c_mktsegment"))
     val path = s"$out/table.parquet"
     // clustered: the exported log carries the clustering writer
-    // feature + delta.clustering domain, and the post-cleanup
-    // checkpoint-only replay below proves the domain survives in the
-    // checkpoint (the python reader's feature-implies-domain check)
+    // feature + delta.clustering domain, and the reader's checkpoint +
+    // tail replay proves the domain survives in the checkpoint (the
+    // python reader's feature-implies-domain check)
     val t = ResourceTable(spark, path)
       .createIfNotExists(cust.schema, clusterCols = Seq("c_custkey"))
+      .enableChangeDataFeed()
 
     // history: base load, then 12 single-row upserts (descending
     // acctbal so stats vary per file), a schema evolution, a delete,
@@ -65,14 +72,10 @@ object ExportDemo {
       .withColumn("c_custkey", col("c_custkey") + 2000000L)
       .withColumn("flagged", lit(false)), txn = Some(("demoSink", 4L)))
     val dv = DeltaExport.export(t)
-    // age out pre-checkpoint entries so the python reader MUST replay
-    // checkpoint + tail, not just the json chain
-    val cleaned = DeltaExport.cleanupLog(t, retentionMs = 0L)
 
     t.read().coalesce(1)
       .write.mode("overwrite").parquet(s"$out/expected.parquet")
     println(s"""{"table":"$path","deltaVersion":$dv,""" +
-      s""""cleanedEntries":${cleaned.size},""" +
       s""""expected":"$out/expected.parquet"}""")
     spark.stop()
   }

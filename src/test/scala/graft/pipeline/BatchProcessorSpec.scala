@@ -112,6 +112,58 @@ class BatchProcessorSpec extends SparkSpec {
     assert(t.history().collect().exists(_.getString(2) == "OPTIMIZE"))
   }
 
+  /** `n` one-entry Patient PUT bundles, one message each, over two
+    * partitions: a multi-partition batch whose dedup shuffles. */
+  private def patientPuts(n: Int): Seq[(String, Int, Long)] =
+    (0 until n).map { i =>
+      (s"""{"resourceType":"Bundle","type":"transaction","entry":[""" +
+        s"""{"fullUrl":"p$i","resource":{"resourceType":"Patient",""" +
+        s""""id":"p$i","active":true},"request":{"method":"PUT",""" +
+        s""""url":"Patient/p$i"}}]}""", i % 2, i.toLong)
+    }
+
+  test("a small insert into a fresh table commits one data file") {
+    val dir = tmpDir("bp")
+    val bp = new BatchProcessor(dir, upkeepInterval = 0)
+    bp.processBatch(prepared(patientPuts(40)), 1)
+    val t = ResourceTable(spark, s"$dir/Patient.parquet")
+    assert(t.read().count() == 40)
+    // the dedup -> encode -> write plan stays lazy, so adaptive
+    // execution coalesces the dedup shuffle into one write task
+    // instead of one file per shuffle partition
+    val files = t.fileManifest(t.latestVersion.get)
+    assert(files.size == 1, s"expected 1 data file, got ${files.size}")
+  }
+
+  test("batch-0 upkeep finds nothing to compact after a small insert") {
+    val dir = tmpDir("bp")
+    val bp = new BatchProcessor(dir, upkeepInterval = 50)
+    bp.processBatch(prepared(patientPuts(40)), 0)
+    val t = ResourceTable(spark, s"$dir/Patient.parquet")
+    assert(t.read().count() == 40)
+    assert(!t.history().collect().exists(_.getString(2) == "OPTIMIZE"))
+  }
+
+  test("processBatch leaves no cached plan behind") {
+    val dir = tmpDir("bp")
+    spark.catalog.clearCache()
+    val cache = spark.sharedState.cacheManager
+    val bp = new BatchProcessor(dir, upkeepInterval = 0)
+    bp.processBatch(prepared(patientPuts(4)), 1)
+    // a batch with DELETEs: the table holds rows, so upsert caches its
+    // source, and the delete branch caches its ids
+    bp.processBatch(prepared(Seq(
+      (fixture("batches/put-1.json"), 0, 10L),
+      (fixture("batches/delete-1.json"), 0, 11L)) ++
+      patientPuts(2).map { case (j, p, o) => (j, p, o + 20L) }), 2)
+    assert(cache.isEmpty)
+    assert(ResourceTable(spark, s"$dir/Patient.parquet").read().count() == 4)
+    val logging = new BatchProcessor(dir, upkeepInterval = 0,
+      logTopicCounts = true)
+    logging.processBatch(prepared(patientPuts(3)), 3)
+    assert(cache.isEmpty)
+  }
+
   test("clustering columns flow through to the table layer") {
     val dir = tmpDir("bp")
     val bp = new BatchProcessor(dir, upkeepInterval = 0,
