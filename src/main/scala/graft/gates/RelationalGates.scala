@@ -201,28 +201,22 @@ private[graft] object RelationalGates {
     //      the rewrite end-to-end ----
     "q_interval_join_rule" -> ((s, dir) => {
       graft.GraftExtensions.register(s)
-      val prev = try Some(s.conf.get("graft.rules.intervalJoin.binUs"))
-        catch { case _: Throwable => None }
-      s.conf.set("graft.rules.intervalJoin.binUs", "7200000000")
-      try {
-        val ev = eventsUs(s, dir)
-        val points = ev.filter(col("event_type") === "view")
-          .select(col("event_id"), col("user_id"), col("ts_us"))
-        val iv = ev.filter(col("event_type") === "purchase" &&
-            col("event_id") % 40 === 0)
-          .select(col("event_id").as("iv_id"),
-            col("ts_us").as("start_us"),
-            (col("ts_us") + 7200000000L).as("end_us"))
-        // the naive join Catalyst would nested-loop; the rule fixes it
-        val out = points.join(iv,
-            col("ts_us") >= col("start_us") && col("ts_us") < col("end_us"))
-          .select("event_id", "user_id", "ts_us", "iv_id", "start_us")
-        out.cache().count() // materialize while the conf is set
-        out
-      } finally prev match {
-        case Some(v) => s.conf.set("graft.rules.intervalJoin.binUs", v)
-        case None => s.conf.unset("graft.rules.intervalJoin.binUs")
-      }
+      // the rule reads binUs at optimization; a clone scopes it to
+      // this query
+      val c = org.apache.spark.sql.graftbridge.SessionBridge.pinned(s,
+        Map("graft.rules.intervalJoin.binUs" -> "7200000000"))
+      val ev = eventsUs(c, dir)
+      val points = ev.filter(col("event_type") === "view")
+        .select(col("event_id"), col("user_id"), col("ts_us"))
+      val iv = ev.filter(col("event_type") === "purchase" &&
+          col("event_id") % 40 === 0)
+        .select(col("event_id").as("iv_id"),
+          col("ts_us").as("start_us"),
+          (col("ts_us") + 7200000000L).as("end_us"))
+      // the naive join Catalyst would nested-loop; the rule fixes it
+      points.join(iv,
+          col("ts_us") >= col("start_us") && col("ts_us") < col("end_us"))
+        .select("event_id", "user_id", "ts_us", "iv_id", "start_us")
     }),
 
 

@@ -1,10 +1,14 @@
 package graft.gates
 
 import graft.ops.{Curation, Dedup, Multimodal, Similarity, TextStats, TopK}
+import graft.streaming.StatefulOps
 import graft.tables.ResourceTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.SparkEntry._
@@ -20,37 +24,103 @@ import graft.SparkEntry._
   * above) so memoization remains JVM-global across domains.
   */
 private[graft] object StreamGates {
+
+  /** Stateful gates pin their streams to 4 shuffle partitions: a
+    * stateful operator's cost here is per-partition fixed overhead
+    * (state store open/commit/eviction × partitions × sides ×
+    * batches), not row throughput. On a real cluster you would size
+    * this to the executors.
+    */
+  private val FewPartitions = Map("spark.sql.shuffle.partitions" -> "4")
+
+  private val drainOnce: StreamingQuery => Unit = _.processAllAvailable()
+
+  /** Runs one streaming query into a memory sink and returns the
+    * sink's table, materialized before the query goes away. `build`
+    * gets a clone of `s` with `pins` set and returns the query's
+    * DataFrame, planned on that clone, plus how to feed the running
+    * query. The query snapshots the clone's conf at start, and `s`
+    * never sees the pins.
+    */
+  private def memorySink(s: SparkSession, mode: String,
+      pins: Map[String, String] = Map.empty)(
+      build: SparkSession => (DataFrame, StreamingQuery => Unit))
+      : DataFrame = {
+    val c = SessionBridge.pinned(s, pins)
+    val (df, feed) = build(c)
+    val name = s"gate_sink_${System.nanoTime()}"
+    val q = df.writeStream.format("memory").queryName(name)
+      .outputMode(mode).start()
+    try feed(q) finally q.stop()
+    val out = c.table(name).cache()
+    out.count()
+    out
+  }
+
+  /** events.parquet as a file stream with `ts` cast to `tsType`. The
+    * file-stream source needs a directory/glob base: a glob matching
+    * exactly events.parquet keeps the parent as basePath.
+    */
+  private def eventStream(c: SparkSession, dir: String,
+                          tsType: DataType): DataFrame = {
+    val raw = t(c, dir, "events")
+    val stream = c.readStream.schema(raw.schema)
+      .parquet(s"$dir/events.parque[t]")
+    if (raw.schema("ts").dataType == LongType)
+      stream.withColumn("ts",
+        expr("timestamp_micros(ts DIV 1000)").cast(tsType))
+    else stream.withColumn("ts", col("ts").cast(tsType))
+  }
+
+  /** Hourly per-type event counts over the events file stream. */
+  private def hourlyCounts(c: SparkSession, dir: String): DataFrame =
+    eventStream(c, dir, TimestampNTZType)
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(col("window.start").as("w_start"), col("event_type"),
+        col("cnt"))
+
+  /** The view and purchase events of `dir` as two MemoryStreams on
+    * `c`, every row added up front. Returns them as
+    * (v_id, v_ts_us, user_id, v_ts) and (p_id, p_ts_us, p_user, p_ts),
+    * a `sentinel(tsUs)` that adds one user -1 view and purchase, and
+    * the newest event time.
+    */
+  private def viewsAndPurchases(c: SparkSession, dir: String)
+      : (DataFrame, DataFrame, Long => Unit, Long) = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = c.sqlContext
+    import c.implicits._
+    val ev = eventsUs(c, dir)
+      .select(col("event_id"), col("ts_us"), col("user_id"),
+        col("event_type"))
+      .filter(col("event_type").isin("view", "purchase"))
+      .collect()
+    val views = MemoryStream[(Long, Long, Long)]
+    val purch = MemoryStream[(Long, Long, Long)]
+    def tup(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    views.addData(ev.filter(_.getString(3) == "view").map(tup).toSeq)
+    purch.addData(ev.filter(_.getString(3) == "purchase").map(tup).toSeq)
+    val vDf = views.toDF().toDF("v_id", "v_ts_us", "user_id")
+      .withColumn("v_ts", expr("timestamp_micros(v_ts_us)"))
+    val pDf = purch.toDF().toDF("p_id", "p_ts_us", "p_user")
+      .withColumn("p_ts", expr("timestamp_micros(p_ts_us)"))
+    def sentinel(ts: Long): Unit = {
+      views.addData(Seq((-1L, ts, -1L)))
+      purch.addData(Seq((-1L, ts, -1L)))
+    }
+    (vDf, pDf, sentinel, ev.iterator.map(_.getLong(1)).maxOption
+      .getOrElse(0L))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- Structured Streaming in the gate: a real streaming query
     //      (parquet file stream → event-time window agg → memory sink,
     //      complete mode) whose final table must equal the batch
     //      oracle — exactly-once stream/batch parity ----
-    "q_stream_window" -> ((s, dir) => {
-      val raw = t(s, dir, "events")
-      // the file-stream source needs a directory/glob base — a glob
-      // matching exactly events.parquet keeps the parent as basePath
-      val stream = s.readStream.schema(raw.schema)
-        .parquet(s"$dir/events.parque[t]")
-      val withTs =
-        if (raw.schema("ts").dataType == LongType)
-          stream.withColumn("ts",
-            expr("timestamp_micros(ts DIV 1000)").cast(TimestampNTZType))
-        else stream.withColumn("ts", col("ts").cast(TimestampNTZType))
-      val agg = withTs
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(col("window.start").as("w_start"), col("event_type"),
-          col("cnt"))
-      val name = s"stream_window_${System.nanoTime()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      // materialize before the sink table goes away
-      val out = s.table(name).cache()
-      out.count()
-      out
-    }),
+    "q_stream_window" -> ((s, dir) =>
+      memorySink(s, "complete") { c => (hourlyCounts(c, dir), drainOnce) }),
 
 
     // ---- the SAME streaming window aggregation under the ROCKSDB
@@ -61,27 +131,8 @@ private[graft] object StreamGates {
     //      this file; shares q_stream_window's oracle — the provider
     //      must not change a single row ----
     "q_stream_rocksdb" -> ((s, dir) =>
-      graft.streaming.StatefulOps.withRocksDbState(s) {
-        val raw = t(s, dir, "events")
-        val stream = s.readStream.schema(raw.schema)
-          .parquet(s"$dir/events.parque[t]")
-        val withTs =
-          if (raw.schema("ts").dataType == LongType)
-            stream.withColumn("ts",
-              expr("timestamp_micros(ts DIV 1000)").cast(TimestampNTZType))
-          else stream.withColumn("ts", col("ts").cast(TimestampNTZType))
-        val agg = withTs
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(col("window.start").as("w_start"), col("event_type"),
-            col("cnt"))
-        val name = s"stream_rocksdb_${System.nanoTime()}"
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-        val out = s.table(name).cache()
-        out.count()
-        out
+      memorySink(s, "complete", StatefulOps.RocksDbState) { c =>
+        (hourlyCounts(c, dir), drainOnce)
       }),
 
 
@@ -96,34 +147,21 @@ private[graft] object StreamGates {
     //      over the same batch split. MemoryStream feeding is gate
     //      harness, not operator semantics ----
     "q_stream_tws" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      import graft.streaming.StatefulOps
       val ev = t(s, dir, "events")
         .select(col("event_type"), (col("event_id") % 3).as("b"),
           floor(col("value") * 100).cast(LongType).as("m"))
         .collect()
-      val stream = MemoryStream[StatefulOps.Contribution]
-      StatefulOps.withRocksDbState(s) {
-        val totals = StatefulOps.runningTotals(stream.toDS())
-        // stateful-operator cost is per-partition fixed overhead —
-        // pin the stream's shuffle partitions low (captured at START)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val name = s"stream_tws_${System.nanoTime()}"
-        val q =
-          try totals.toDF().writeStream.format("memory").queryName(name)
-            .outputMode("append").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        try for (b <- 0L to 2L) {
-          stream.addData(ev.filter(_.getLong(1) == b).map(r =>
-            StatefulOps.Contribution(r.getString(0), r.getLong(2))).toSeq)
-          q.processAllAvailable()
-        } finally q.stop()
-        val out = s.table(name).cache()
-        out.count()
-        out
+      memorySink(s, "append", StatefulOps.RocksDbState ++ FewPartitions) {
+        c =>
+          implicit val sqlCtx: org.apache.spark.sql.SQLContext = c.sqlContext
+          import c.implicits._
+          val stream = MemoryStream[StatefulOps.Contribution]
+          (StatefulOps.runningTotals(stream.toDS()).toDF(), q =>
+            for (b <- 0L to 2L) {
+              stream.addData(ev.filter(_.getLong(1) == b).map(r =>
+                StatefulOps.Contribution(r.getString(0), r.getLong(2))).toSeq)
+              q.processAllAvailable()
+            })
       }
     }),
 
@@ -132,98 +170,34 @@ private[graft] object StreamGates {
     //      within 10 minutes", emitted as soon as the match arrives —
     //      no watermark wait for matched rows, state still bounded by
     //      the range condition + watermarks ----
-    "q_stream_semi_join" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val ev = eventsUs(s, dir)
-        .select(col("event_id"), col("ts_us"), col("user_id"),
-          col("event_type"))
-        .filter(col("event_type").isin("view", "purchase"))
-        .collect()
-      val views = MemoryStream[(Long, Long, Long)]
-      val purch = MemoryStream[(Long, Long, Long)]
-      def tup(r: org.apache.spark.sql.Row) =
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      views.addData(ev.filter(_.getString(3) == "view").map(tup).toSeq)
-      purch.addData(ev.filter(_.getString(3) == "purchase").map(tup).toSeq)
-      val vDf = views.toDF().toDF("v_id", "v_ts_us", "user_id")
-        .withColumn("v_ts", expr("timestamp_micros(v_ts_us)"))
-      val pDf = purch.toDF().toDF("p_id", "p_ts_us", "p_user")
-        .withColumn("p_ts", expr("timestamp_micros(p_ts_us)"))
-      val joined = graft.streaming.StreamOps.eventTimeRangeJoin(
-        vDf, pDf, "v_ts", "p_ts", col("p_user") === col("user_id"),
-        maxDelay = "10 minutes", joinType = "left_semi")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val name = s"stream_semi_${System.nanoTime()}"
-      val q =
-        try joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name)
-        .select(col("v_id"), col("user_id"), col("v_ts_us")).cache()
-      out.count()
-      out
-    }),
+    "q_stream_semi_join" -> ((s, dir) =>
+      memorySink(s, "append", FewPartitions) { c =>
+        val (vDf, pDf, _, _) = viewsAndPurchases(c, dir)
+        (graft.streaming.StreamOps.eventTimeRangeJoin(
+          vDf, pDf, "v_ts", "p_ts", col("p_user") === col("user_id"),
+          maxDelay = "10 minutes", joinType = "left_semi"), drainOnce)
+      }.select(col("v_id"), col("user_id"), col("v_ts_us"))),
 
 
-    "q_stream_outer_join" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val ev = eventsUs(s, dir)
-        .select(col("event_id"), col("ts_us"), col("user_id"),
-          col("event_type"))
-        .filter(col("event_type").isin("view", "purchase"))
-        .collect()
-      val views = MemoryStream[(Long, Long, Long)]
-      val purch = MemoryStream[(Long, Long, Long)]
-      def tup(r: org.apache.spark.sql.Row) =
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      views.addData(ev.filter(_.getString(3) == "view").map(tup).toSeq)
-      purch.addData(ev.filter(_.getString(3) == "purchase").map(tup).toSeq)
-      val maxTs = ev.map(_.getLong(1)).max
-      val vDf = views.toDF().toDF("v_id", "v_ts_us", "user_id")
-        .withColumn("v_ts", expr("timestamp_micros(v_ts_us)"))
-      val pDf = purch.toDF().toDF("p_id", "p_ts_us", "p_user")
-        .withColumn("p_ts", expr("timestamp_micros(p_ts_us)"))
-      val joined = graft.streaming.StreamOps.eventTimeRangeJoinOuter(
-        vDf, pDf, "v_ts", "p_ts", col("p_user") === col("user_id"),
-        maxDelay = "10 minutes")
-      // Stateful-operator cost here is per-partition fixed overhead
-      // (state store open/commit/eviction × partitions × sides ×
-      // batches), not row throughput — pin the stream's shuffle
-      // partitions low; the conf is captured at query START, so restore
-      // right after. (On a real cluster you'd size this to executors.)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val name = s"stream_outer_${System.nanoTime()}"
-      val q =
-        try joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        q.processAllAvailable()
-        // two sentinel rounds: watermark advances at batch END, and the
-        // eviction that releases unmatched rows runs in the NEXT batch
-        for (day <- 1 to 2) {
-          val ts = maxTs + day * 86400000000L
-          views.addData(Seq((-1L, ts, -1L)))
-          purch.addData(Seq((-1L, ts, -1L)))
+    "q_stream_outer_join" -> ((s, dir) =>
+      memorySink(s, "append", FewPartitions) { c =>
+        val (vDf, pDf, sentinel, maxTs) = viewsAndPurchases(c, dir)
+        (graft.streaming.StreamOps.eventTimeRangeJoinOuter(
+          vDf, pDf, "v_ts", "p_ts", col("p_user") === col("user_id"),
+          maxDelay = "10 minutes"), q => {
           q.processAllAvailable()
-        }
-      } finally q.stop()
-      val out = s.table(name)
-        .filter(col("user_id") >= 0)
+          // two sentinel rounds: watermark advances at batch END, and
+          // the eviction that releases unmatched rows runs in the NEXT
+          // batch
+          for (day <- 1 to 2) {
+            sentinel(maxTs + day * 86400000000L)
+            q.processAllAvailable()
+          }
+        })
+      }.filter(col("user_id") >= 0)
         .select(col("v_id"), col("user_id"), col("v_ts_us"),
           coalesce(col("p_id"), lit(-1L)).as("p_id"),
-          coalesce(col("p_ts_us"), lit(-1L)).as("p_ts_us"))
-        .cache()
-      out.count()
-      out
-    }),
+          coalesce(col("p_ts_us"), lit(-1L)).as("p_ts_us"))),
 
 
     // ---- the REAL ingest path in the gate: bundles synthesized from
@@ -328,48 +302,36 @@ private[graft] object StreamGates {
     //      run through a real streaming query and hash-matched. The
     //      brute-force scan is the semantics here; the LSH/IVF gate
     //      queries are the sub-linear scale paths ----
-    "q_stream_ann" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val stream = s.readStream.schema(emb.schema)
-        .parquet(s"$dir/embeddings.parque[t]")
-        .filter(col("vec_id") % 10 === 0)
-        .select((col("vec_id") + 100000).as("q_id"),
-          col("embedding").as("q_vec"))
-      val corpus = emb.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_vec"))
-      val hits = stream.join(corpus,
-          Similarity.cosine(col("q_vec"), col("c_vec")) >= 0.45)
-        .select(col("q_id"), col("c_id"))
-      val name = s"stream_ann_${System.nanoTime()}"
-      val q = hits.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).cache()
-      out.count()
-      out
-    }),
+    "q_stream_ann" -> ((s, dir) =>
+      memorySink(s, "append") { c =>
+        val emb = t(c, dir, "embeddings")
+        val stream = c.readStream.schema(emb.schema)
+          .parquet(s"$dir/embeddings.parque[t]")
+          .filter(col("vec_id") % 10 === 0)
+          .select((col("vec_id") + 100000).as("q_id"),
+            col("embedding").as("q_vec"))
+        val corpus = emb.select(col("vec_id").as("c_id"),
+          col("embedding").as("c_vec"))
+        (stream.join(corpus,
+            Similarity.cosine(col("q_vec"), col("c_vec")) >= 0.45)
+          .select(col("q_id"), col("c_id")), drainOnce)
+      }),
 
 
     // ---- STREAMING PQ: a stream of query vectors probes the encoded
     //      static corpus — stateless cell equi-join, exact integer ADC
     //      threshold as the residual condition ----
-    "q_stream_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = pqMemo.computeIfAbsent(dir, _ => graft.ops.Pq.trainOn(emb))
-      val stream = s.readStream.schema(emb.schema)
-        .parquet(s"$dir/embeddings.parque[t]")
-        .filter(col("vec_id") % 25 === 0)
-        .withColumn("vec_id", col("vec_id") + 200000)
-      val hits = graft.ops.Pq.adcHitsStream(
-        stream, emb, cb, maxAdc = 900000000000L, probes = 2)
-      val name = s"stream_pq_${System.nanoTime()}"
-      val q = hits.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).cache()
-      out.count()
-      out
-    }),
+    "q_stream_pq" -> ((s, dir) =>
+      memorySink(s, "append") { c =>
+        val emb = t(c, dir, "embeddings")
+        val cb = pqMemo.computeIfAbsent(dir, _ => graft.ops.Pq.trainOn(emb))
+        val stream = c.readStream.schema(emb.schema)
+          .parquet(s"$dir/embeddings.parque[t]")
+          .filter(col("vec_id") % 25 === 0)
+          .withColumn("vec_id", col("vec_id") + 200000)
+        (graft.ops.Pq.adcHitsStream(
+          stream, emb, cb, maxAdc = 900000000000L, probes = 2), drainOnce)
+      }),
 
 
     // ---- STREAMING near-dup against a corpus LSH index: incoming
@@ -379,41 +341,31 @@ private[graft] object StreamGates {
     //      which makes the result exactly oracle-able — an identical
     //      text has an identical signature, so LSH NEVER misses an
     //      exact duplicate ----
-    "q_stream_neardup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val index = Dedup.bandedIndex(docs, "doc_id", "text")
-      val stream = s.readStream.schema(docs.schema)
-        .parquet(s"$dir/documents.parque[t]")
-        .filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 10000).as("doc_id"), col("text"))
-      val cand = Dedup.nearDupAgainstIndex(
-        stream, index, "doc_id", "text", minJaccard = 0.5)
-      // exact confirm: join the candidate's corpus doc back to its
-      // text and compare with the incoming text (both stream-static)
-      val corpusText = docs.select(col("doc_id").as("corpus_doc"),
-        col("text").as("corpus_text"))
-      val inText = docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 10000).as("doc"),
-          col("text").as("in_text"))
-      val confirmed = cand
-        .join(corpusText, Seq("corpus_doc"))
-        .join(inText, Seq("doc"))
-        .filter(col("in_text") === col("corpus_text"))
-        .select(col("doc"), col("corpus_doc"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val name = s"stream_neardup_${System.nanoTime()}"
-      val q =
-        try confirmed.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.processAllAvailable() finally q.stop()
+    "q_stream_neardup" -> ((s, dir) =>
+      memorySink(s, "append", FewPartitions) { c =>
+        val docs = t(c, dir, "documents")
+        val index = Dedup.bandedIndex(docs, "doc_id", "text")
+        val stream = c.readStream.schema(docs.schema)
+          .parquet(s"$dir/documents.parque[t]")
+          .filter(col("doc_id") % 7 === 0)
+          .select((col("doc_id") + 10000).as("doc_id"), col("text"))
+        val cand = Dedup.nearDupAgainstIndex(
+          stream, index, "doc_id", "text", minJaccard = 0.5)
+        // exact confirm: join the candidate's corpus doc back to its
+        // text and compare with the incoming text (both stream-static)
+        val corpusText = docs.select(col("doc_id").as("corpus_doc"),
+          col("text").as("corpus_text"))
+        val inText = docs.filter(col("doc_id") % 7 === 0)
+          .select((col("doc_id") + 10000).as("doc"),
+            col("text").as("in_text"))
+        (cand
+          .join(corpusText, Seq("corpus_doc"))
+          .join(inText, Seq("doc"))
+          .filter(col("in_text") === col("corpus_text"))
+          .select(col("doc"), col("corpus_doc")), drainOnce)
       // band multiplicity collapses AFTER materialization (a stream
       // can't dropDuplicates unboundedly; the memory table can)
-      val out = s.table(name).distinct().cache()
-      out.count()
-      out
-    }),
+      }.distinct()),
 
 
     // ---- gap sessionization (batch form of the stateful op) ----
@@ -429,11 +381,7 @@ private[graft] object StreamGates {
     //      sentinel key closing the tail — emitted sessions must
     //      equal the batch gap-sessionization relationally ----
     "q_stream_tws_session" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
       import graft.ops.Sessionize
-      import graft.streaming.StatefulOps
       val ev = eventsUs(s, dir)
         .select(col("user_id"), col("ts_us"), col("event_id")).collect()
         .map(r => Sessionize.Event(r.getLong(0), r.getLong(1),
@@ -448,66 +396,52 @@ private[graft] object StreamGates {
       }
       val c1 = cutAt(n / 3, 1)
       val c2 = cutAt(2 * n / 3, c1)
-      val stream = MemoryStream[Sessionize.Event]
-      StatefulOps.withRocksDbState(s) {
-        val sess = StatefulOps.sessionizeTws(stream.toDS(),
-          gapSeconds = 21600)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val name = s"stream_tws_sess_${System.nanoTime()}"
-        val q =
-          try sess.toDF().writeStream.format("memory").queryName(name)
-            .outputMode("append").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        try {
-          Seq(ev.slice(0, c1), ev.slice(c1, c2), ev.slice(c2, n))
-            .foreach { b =>
-              stream.addData(b.toSeq)
+      memorySink(s, "append", StatefulOps.RocksDbState ++ FewPartitions) {
+        c =>
+          implicit val sqlCtx: org.apache.spark.sql.SQLContext = c.sqlContext
+          import c.implicits._
+          val stream = MemoryStream[Sessionize.Event]
+          (StatefulOps.sessionizeTws(stream.toDS(), gapSeconds = 21600)
+            .toDF(), q => {
+            Seq(ev.slice(0, c1), ev.slice(c1, c2), ev.slice(c2, n))
+              .foreach { b =>
+                stream.addData(b.toSeq)
+                q.processAllAvailable()
+              }
+            // sentinel key far past every last+gap: timers flush the
+            // tail sessions; the sentinel's own first session closes on
+            // its second event and is filtered back out
+            val maxTs = ev.last.tsMicros
+            for (d <- 1 to 2) {
+              stream.addData(Seq(Sessionize.Event(-1L,
+                maxTs + d * 2592000000000L, 0L)))
               q.processAllAvailable()
             }
-          // sentinel key far past every last+gap: timers flush the
-          // tail sessions; the sentinel's own first session closes on
-          // its second event and is filtered back out
-          val maxTs = ev.last.tsMicros
-          for (d <- 1 to 2) {
-            stream.addData(Seq(Sessionize.Event(-1L,
-              maxTs + d * 2592000000000L, 0L)))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        val out = s.table(name).filter(col("userId") =!= -1L)
-          .select(col("userId").as("user_id"),
-            col("sessionStartUs").as("session_start_us"),
-            col("sessionEndUs").as("session_end_us"),
-            col("nEvents").as("n_events"),
-            col("firstEventId").as("first_event_id"))
-          .cache()
-        out.count()
-        out
-      }
+          })
+      }.filter(col("userId") =!= -1L)
+        .select(col("userId").as("user_id"),
+          col("sessionStartUs").as("session_start_us"),
+          col("sessionEndUs").as("session_end_us"),
+          col("nEvents").as("n_events"),
+          col("firstEventId").as("first_event_id"))
     }),
 
 
     // ---- stream ⋈ static-dimension broadcast join (T5-style fan-out
     //      enrichment; the static side never re-scans per batch) ----
-    "q_stream_static_join" -> ((s, dir) => {
-      import s.implicits._
-      val raw = t(s, dir, "events")
-      val stream = s.readStream.schema(raw.schema)
-        .parquet(s"$dir/events.parque[t]")
-      val dim = Seq(("click", 1L), ("view", 2L), ("signup", 5L),
-        ("purchase", 10L), ("error", 0L)).toDF("event_type", "weight")
-      val agg = stream.join(broadcast(dim), Seq("event_type"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("cnt"), sum(col("weight")).as("weighted"))
-      val name = s"stream_static_${System.nanoTime()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).cache()
-      out.count()
-      out
-    }),
+    "q_stream_static_join" -> ((s, dir) =>
+      memorySink(s, "complete") { c =>
+        import c.implicits._
+        val raw = t(c, dir, "events")
+        val stream = c.readStream.schema(raw.schema)
+          .parquet(s"$dir/events.parque[t]")
+        val dim = Seq(("click", 1L), ("view", 2L), ("signup", 5L),
+          ("purchase", 10L), ("error", 0L)).toDF("event_type", "weight")
+        (stream.join(broadcast(dim), Seq("event_type"))
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("cnt"), sum(col("weight")).as("weighted")),
+          drainOnce)
+      }),
 
 
     // ---- built-in session_window (event-time gap sessions as a
@@ -651,31 +585,15 @@ private[graft] object StreamGates {
     // ---- sliding event-time windows (10 min length / 5 min slide):
     //      each event lands in two overlapping windows; watermarked
     //      state is dropped as windows close ----
-    "q_stream_sliding" -> ((s, dir) => {
-      val raw = t(s, dir, "events")
-      val stream = s.readStream.schema(raw.schema)
-        .parquet(s"$dir/events.parque[t]")
-      val withTs =
-        if (raw.schema("ts").dataType == LongType)
-          stream.withColumn("ts",
-            expr("timestamp_micros(ts DIV 1000)").cast(TimestampType))
-        else stream.withColumn("ts", col("ts").cast(TimestampType))
-      val agg = graft.streaming.StreamOps.slidingCounts(
-          withTs, "ts", windowLength = "10 minutes", slide = "5 minutes",
-          watermark = "30 minutes")
-        .select(unix_micros(col("w_start")).as("w_start_us"), col("cnt"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val name = s"stream_sliding_${System.nanoTime()}"
-      val q =
-        try agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).cache()
-      out.count()
-      out
-    }),
+    "q_stream_sliding" -> ((s, dir) =>
+      memorySink(s, "complete", FewPartitions) { c =>
+        (graft.streaming.StreamOps.slidingCounts(
+            eventStream(c, dir, TimestampType), "ts",
+            windowLength = "10 minutes", slide = "5 minutes",
+            watermark = "30 minutes")
+          .select(unix_micros(col("w_start")).as("w_start_us"), col("cnt")),
+          drainOnce)
+      }),
 
 
     // ---- streaming dedup with watermarked state eviction: duplicate
@@ -683,32 +601,15 @@ private[graft] object StreamGates {
     //      dropped and key state is evicted as the watermark advances —
     //      bounded state on unbounded streams (vs dropDuplicates'
     //      unbounded key set) ----
-    "q_stream_dedup" -> ((s, dir) => {
-      val raw = t(s, dir, "events")
-      val stream = s.readStream.schema(raw.schema)
-        .parquet(s"$dir/events.parque[t]")
-      // watermarks require TIMESTAMP (not NTZ); the session is UTC and
-      // no time column is output, so the cast cannot skew results
-      val withTs =
-        if (raw.schema("ts").dataType == LongType)
-          stream.withColumn("ts",
-            expr("timestamp_micros(ts DIV 1000)").cast(TimestampType))
-        else stream.withColumn("ts", col("ts").cast(TimestampType))
-      val dd = graft.streaming.StreamOps.dedupWithinWatermark(
-          withTs, "ts", Seq("user_id", "event_type"), watermark = "1 hour")
-        .select(col("user_id"), col("event_type"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val name = s"stream_dedup_${System.nanoTime()}"
-      val q =
-        try dd.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name).cache()
-      out.count()
-      out
-    }),
+    "q_stream_dedup" -> ((s, dir) =>
+      memorySink(s, "append", FewPartitions) { c =>
+        // watermarks require TIMESTAMP (not NTZ); the session is UTC
+        // and no time column is output, so the cast cannot skew results
+        (graft.streaming.StreamOps.dedupWithinWatermark(
+            eventStream(c, dir, TimestampType), "ts",
+            Seq("user_id", "event_type"), watermark = "1 hour")
+          .select(col("user_id"), col("event_type")), drainOnce)
+      }),
 
 
     // ---- STREAMING change feed (Delta readChangeFeed-as-a-stream):

@@ -21,13 +21,11 @@ import org.apache.spark.sql.functions._
   * .hash_embed]] token-count buckets (the hashing trick — no
   * vocabulary state), with a constant bias bucket appended.
   *
-  * Shape at scale (the DSIR/k-means "centroid literal" pattern):
-  * each epoch is ONE map-side-combined aggregate over the train
-  * slice — margins are row-local dot products against the current
-  * weights inlined as a (buckets+1)-long literal array, and the
-  * epoch's update collects as buckets+1 longs on the driver. Nothing
-  * shuffles on anything wider than the bucket id; T epochs = T scans
-  * of the (cacheable) train slice. Scoring is one row-local
+  * Shape at scale: each epoch is ONE shuffle-free job over the cached
+  * train slice — margins are row-local dot products against the
+  * current weights shipped with the task, and each partition's
+  * update arrives on the driver as buckets+1 longs; T epochs = T
+  * scans of the cached slice. Scoring is one row-local
   * projection with the final weights — zero joins, fuses into
   * whole-stage codegen with the surrounding plan.
   */
@@ -52,10 +50,8 @@ object Classifier {
   /** Integer margin of one row under literal weights: Σ w_b · x_b
     * over the buckets+1 features. Row-local. The weights are ONE
     * array-typed literal (`typedlit`), not a 65-node `array(lit…)`
-    * tree: the training loop re-plans this expression every epoch,
-    * and the per-epoch analysis/optimization cost scales with the
-    * expression tree size (measured ~0.15 s/epoch driver gap at 20
-    * epochs, the dominant cost of the whole op).
+    * tree: analysis/optimization cost scales with the expression
+    * tree size.
     */
   private def marginExpr(feats: Column, w: Array[Long]): Column =
     aggregate(
@@ -63,7 +59,7 @@ object Classifier {
         (c, wb) => c.cast("long") * wb),
       lit(0L), (acc, x) => acc + x)
 
-  /** Train the batch perceptron: T epochs, each one aggregate over
+  /** Train the batch perceptron: T epochs, each one pass over
     * `train`. `labelCol` is boolean (true = positive / keep class,
     * mapped to y = +1; false → −1). Returns the learned weights,
     * length `buckets + 1` (bias last). Integer-exact: the result is
@@ -76,52 +72,50 @@ object Classifier {
                       biasScale: Int = 16): Array[Long] = {
     require(epochs >= 0, s"epochs must be >= 0, got $epochs")
     val n = buckets + 1
+    // each row's label and hashed features, decoded once and cached
+    // as plain arrays: the epochs below never re-plan a query
     val feats = train.select(
-      when(labelCol, 1L).otherwise(-1L).as("__y"),
-      features(col(textCol), buckets, biasScale).as("__x"))
-      .cache()
-    // Per-epoch FIXED cost dominates this loop (the epoch's compute is
-    // a 65-weight dot product over the cached features): under AQE
-    // every epoch pays two scheduler rounds plus a per-stage re-plan,
-    // and without it the final aggregate would run at
-    // spark.sql.shuffle.partitions tiny tasks. Pin both for the loop:
-    // the final aggregate has at most buckets+1 groups, so ONE reduce
-    // partition is the right size at any corpus scale (the partial,
-    // map-side aggregate keeps the feats partitioning), and AQE has
-    // nothing to adapt in a 65-group plan. Restored in finally —
-    // measured 2.4 -> 1.1 s on the bench gate (20 epochs).
-    val conf = train.sparkSession.conf
-    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", "1")
+        when(labelCol, 1L).otherwise(-1L).as("__y"),
+        features(col(textCol), buckets, biasScale).as("__x"))
+      .filter(col("__x").isNotNull)
+      .rdd.map(r => (r.getLong(0), r.getSeq[Int](1).toArray))
+      .persist()
+    // Each epoch is ONE job with no shuffle: every partition folds its
+    // misclassified (y·margin <= 0) rows' y·x into a dense n-long
+    // update, and the driver sums the partitions' arrays. No plan, no
+    // shuffle, so no conf to pin. q_perceptron_filter at sf0.1 (Bench
+    // reps=3, 4 cores, median of 5 runs a side): 2.61 s for a SQL
+    // group-by per epoch under a pinned conf -> 0.80 s.
     try {
       var w = Array.fill(n)(0L)
       var t = 0
       while (t < epochs) {
-        // misclassified (y·margin <= 0) rows contribute y·x; one
-        // posexplode + hash aggregate keyed on the bucket id
-        val upd = feats
-          .withColumn("__m", marginExpr(col("__x"), w))
-          .filter(col("__y") * col("__m") <= 0L)
-          .select(col("__y"), posexplode(col("__x")).as(Seq("__b", "__c")))
-          .groupBy(col("__b"))
-          .agg(sum(col("__y") * col("__c").cast("long")).as("__u"))
-          .collect()
-        if (upd.isEmpty) t = epochs // converged: nothing misclassified
+        val cur = w
+        val upd = feats.aggregate(new Array[Long](n))(
+          { case (acc, (y, x)) =>
+            var m = 0L
+            var i = 0
+            while (i < n) { m += x(i) * cur(i); i += 1 }
+            if (y * m <= 0L) {
+              i = 0
+              while (i < n) { acc(i) += y * x(i); i += 1 }
+            }
+            acc
+          },
+          { (a, b) =>
+            var i = 0
+            while (i < n) { a(i) += b(i); i += 1 }
+            a
+          })
+        // a zero update leaves w, and so every later epoch, unchanged
+        if (upd.forall(_ == 0L)) t = epochs
         else {
-          val next = w.clone()
-          upd.foreach(r => next(r.getInt(0)) += r.getLong(1))
-          w = next
+          w = Array.tabulate(n)(i => cur(i) + upd(i))
           t += 1
         }
       }
       w
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
-      conf.set("spark.sql.shuffle.partitions", prevParts)
-      feats.unpersist()
-    }
+    } finally feats.unpersist()
   }
 
   /** Score every row under trained weights: (id, margin, pred) with

@@ -183,25 +183,14 @@ object StatefulOps {
     "org.apache.spark.sql.execution.streaming.state." +
       "RocksDBStateStoreProvider"
 
-  /** Run `body` with the session's state-store provider pinned to
-    * RocksDB (+ changelog checkpointing), restoring the previous confs
-    * after. The provider conf is captured at query START, so scoping
-    * it around `start()` is enough — an already-running query keeps
-    * the provider it started with.
+  /** The confs that run a query's state under [[RocksDbProvider]]
+    * with changelog checkpointing. Set them on a clone of the session
+    * the query is planned on (`SessionBridge.pinned`), never on a
+    * shared one: the query snapshots its conf at start and keeps the
+    * provider it started with.
     */
-  def withRocksDbState[A](spark: org.apache.spark.sql.SparkSession)
-                         (body: => A): A = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val logKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevLog = spark.conf.getOption(logKey)
-    spark.conf.set(provKey, RocksDbProvider)
-    spark.conf.set(logKey, "true")
-    try body
-    finally {
-      prevProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
-      prevLog.fold(spark.conf.unset(logKey))(spark.conf.set(logKey, _))
-    }
-  }
+  val RocksDbState: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
+    "spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled" -> "true")
 }

@@ -2155,15 +2155,6 @@ object DeltaExport {
       throw new IllegalStateException(
         s"$tablePath: delta.columnMapping.mode=$mapMode is not " +
           "supported; this reader handles none, name, and id")
-    // id mode matches parquet columns by field_id, which Spark's
-    // reader only does under this conf. Leaving it set is safe: it
-    // changes nothing for read schemas without parquet.field.id
-    // metadata, which only our id-mode scans carry. If a caller later
-    // turns it OFF and then executes this DataFrame, the scan refuses
-    // loudly (FieldIdParquetFileFormat guards at reader build) rather
-    // than silently name-matching to all-null columns.
-    if (mapMode == "id")
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     val needDv = live.values.exists(_.dv.isDefined)
     // normalize "file:///x", "file:/x", "s3a://bucket/x" to one shape
     // so the scan's `_metadata.file_path` joins the descriptor side

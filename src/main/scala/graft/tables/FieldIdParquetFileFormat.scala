@@ -20,7 +20,9 @@ import org.apache.spark.sql.types._
   * as a missing column, i.e. null, with no error. Re-attaching the
   * ids from the full annotated schema (matching pruned fields by
   * name at every depth) restores id matching at any pruning level
-  * while keeping pruning itself fully effective.
+  * while keeping pruning itself fully effective. Its readers match
+  * by field id whatever `spark.sql.parquet.fieldId.read.enabled` says
+  * on the session.
   */
 class FieldIdParquetFileFormat(val fullSchema: StructType)
     extends ParquetFileFormat {
@@ -60,23 +62,17 @@ class FieldIdParquetFileFormat(val fullSchema: StructType)
       options: Map[String, String],
       hadoopConf: Configuration)
       : PartitionedFile => Iterator[InternalRow] = {
-    // readSnapshot enables this conf when it plans an id-mode scan,
-    // but a user can disable it before the returned DataFrame ever
-    // executes — and Spark's parquet reader would then silently fall
-    // back to NAME matching, i.e. every id-mapped column reads as
-    // null. Refuse loudly at reader build instead.
-    if (!sparkSession.sessionState.conf.parquetFieldIdReadEnabled)
-      throw new IllegalStateException(
-        "this scan matches parquet columns by field id (Delta " +
-          "id-mode column mapping) and requires " +
-          "spark.sql.parquet.fieldId.read.enabled=true — it was " +
-          "enabled when the snapshot was planned but is now off; " +
-          "re-enable it before executing this DataFrame")
+    // Spark's parquet reader matches by field id only when this key
+    // is on in the reader's Hadoop conf, and silently name-matches
+    // (every id-mapped column reads as null) otherwise. Turn it on in
+    // a copy for this reader alone, whatever the session says.
+    val idConf = new Configuration(hadoopConf)
+    idConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", true)
     super.buildReaderWithPartitionValues(sparkSession,
       reattach(dataSchema, fullSchema).asInstanceOf[StructType],
       partitionSchema,
       reattach(requiredSchema, fullSchema).asInstanceOf[StructType],
-      filters, options, hadoopConf)
+      filters, options, idConf)
   }
 
   // ParquetFileFormat.equals treats ALL parquet formats as equal,

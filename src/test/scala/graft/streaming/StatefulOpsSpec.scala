@@ -2,44 +2,49 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.OutputMode
 
 class StatefulOpsSpec extends SparkSpec {
   import StatefulOps._
-  import spark.implicits._
+
+  /** A clone of the shared session whose queries keep state in
+    * RocksDB; the shared session's own conf is left alone.
+    */
+  private def rocks = SessionBridge.pinned(spark, RocksDbState)
 
   test("transformWithState running totals accumulate across batches " +
       "under the RocksDB provider") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val c = rocks
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = c.sqlContext
+    import c.implicits._
     val stream = MemoryStream[Contribution]
-    withRocksDbState(spark) {
-      val q = runningTotals(stream.toDS())
-        .toDF().writeStream.format("memory").queryName("tws")
-        .outputMode(OutputMode.Append).start()
-      try {
-        stream.addData(Contribution("a", 2), Contribution("a", 3),
-          Contribution("b", 10))
-        q.processAllAvailable()
-        stream.addData(Contribution("a", 5))
-        q.processAllAvailable()
-        // key untouched in a batch → no emission, state intact
-        stream.addData(Contribution("b", -4), Contribution("c", 0))
-        q.processAllAvailable()
-        val rows = spark.table("tws").as[Totals].collect()
-        assert(rows.toSet == Set(
-          Totals("a", 1, 2, 5), Totals("b", 1, 1, 10),
-          Totals("a", 2, 3, 10), Totals("b", 2, 2, 6),
-          Totals("c", 1, 1, 0)), rows.mkString(";"))
-        // the provider actually engaged: RocksDB custom metrics appear
-        // on the stateful operator's progress
-        val metrics = q.lastProgress.stateOperators.head
-          .customMetrics.keySet()
-        assert(metrics.asInstanceOf[java.util.Set[String]].stream()
-          .anyMatch(_.startsWith("rocksdb")),
-          s"no rocksdb metrics: $metrics")
-      } finally q.stop()
-    }
-    // confs restored after the scope
+    val q = runningTotals(stream.toDS())
+      .toDF().writeStream.format("memory").queryName("tws")
+      .outputMode(OutputMode.Append).start()
+    try {
+      stream.addData(Contribution("a", 2), Contribution("a", 3),
+        Contribution("b", 10))
+      q.processAllAvailable()
+      stream.addData(Contribution("a", 5))
+      q.processAllAvailable()
+      // key untouched in a batch → no emission, state intact
+      stream.addData(Contribution("b", -4), Contribution("c", 0))
+      q.processAllAvailable()
+      val rows = c.table("tws").as[Totals].collect()
+      assert(rows.toSet == Set(
+        Totals("a", 1, 2, 5), Totals("b", 1, 1, 10),
+        Totals("a", 2, 3, 10), Totals("b", 2, 2, 6),
+        Totals("c", 1, 1, 0)), rows.mkString(";"))
+      // the provider actually engaged: RocksDB custom metrics appear
+      // on the stateful operator's progress
+      val metrics = q.lastProgress.stateOperators.head
+        .customMetrics.keySet()
+      assert(metrics.asInstanceOf[java.util.Set[String]].stream()
+        .anyMatch(_.startsWith("rocksdb")),
+        s"no rocksdb metrics: $metrics")
+    } finally q.stop()
+    // the shared session never saw the provider
     assert(spark.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass").isEmpty ||
       spark.conf.get("spark.sql.streaming.stateStore.providerClass") !=
@@ -48,40 +53,40 @@ class StatefulOpsSpec extends SparkSpec {
 
   test("sessionizeTws: gap close on arrival + event-time timer flush " +
       "for idle keys") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val c = rocks
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = c.sqlContext
     import graft.ops.Sessionize
+    import c.implicits._
     val stream = MemoryStream[Sessionize.Event]
-    withRocksDbState(spark) {
-      val q = sessionizeTws(stream.toDS(), gapSeconds = 60)
-        .toDF().writeStream.format("memory").queryName("twssess")
-        .outputMode(OutputMode.Append).start()
-      try {
-        val t0 = 1700000000000000L // micros
-        stream.addData(
-          Sessionize.Event(7, t0, 1),
-          Sessionize.Event(7, t0 + 30000000L, 2))
-        q.processAllAvailable()
-        assert(spark.table("twssess").isEmpty) // still open
-        // same-key event past the gap: closes on arrival, opens anew
-        stream.addData(Sessionize.Event(7, t0 + 300000000L, 3))
-        q.processAllAvailable()
-        val closed = spark.table("twssess").collect()
-        assert(closed.length == 1)
-        assert(closed.head.getAs[Long]("nEvents") == 2 &&
-          closed.head.getAs[Long]("firstEventId") == 1)
-        // a DIFFERENT key advances the watermark past 7's last+gap:
-        // the registered timer must flush 7's second session
-        stream.addData(Sessionize.Event(99, t0 + 600000000L, 4))
-        q.processAllAvailable()
-        stream.addData(Sessionize.Event(99, t0 + 601000000L, 5))
-        q.processAllAvailable()
-        val flushed = spark.table("twssess").collect()
-          .filter(_.getAs[Long]("userId") == 7L)
-        assert(flushed.length == 2, flushed.mkString(";"))
-        assert(flushed.map(_.getAs[Long]("firstEventId")).toSet ==
-          Set(1L, 3L))
-      } finally q.stop()
-    }
+    val q = sessionizeTws(stream.toDS(), gapSeconds = 60)
+      .toDF().writeStream.format("memory").queryName("twssess")
+      .outputMode(OutputMode.Append).start()
+    try {
+      val t0 = 1700000000000000L // micros
+      stream.addData(
+        Sessionize.Event(7, t0, 1),
+        Sessionize.Event(7, t0 + 30000000L, 2))
+      q.processAllAvailable()
+      assert(c.table("twssess").isEmpty) // still open
+      // same-key event past the gap: closes on arrival, opens anew
+      stream.addData(Sessionize.Event(7, t0 + 300000000L, 3))
+      q.processAllAvailable()
+      val closed = c.table("twssess").collect()
+      assert(closed.length == 1)
+      assert(closed.head.getAs[Long]("nEvents") == 2 &&
+        closed.head.getAs[Long]("firstEventId") == 1)
+      // a DIFFERENT key advances the watermark past 7's last+gap:
+      // the registered timer must flush 7's second session
+      stream.addData(Sessionize.Event(99, t0 + 600000000L, 4))
+      q.processAllAvailable()
+      stream.addData(Sessionize.Event(99, t0 + 601000000L, 5))
+      q.processAllAvailable()
+      val flushed = c.table("twssess").collect()
+        .filter(_.getAs[Long]("userId") == 7L)
+      assert(flushed.length == 2, flushed.mkString(";"))
+      assert(flushed.map(_.getAs[Long]("firstEventId")).toSet ==
+        Set(1L, 3L))
+    } finally q.stop()
   }
 
   test("foldSessions: in-watermark late events never rewind a " +
@@ -123,54 +128,55 @@ class StatefulOpsSpec extends SparkSpec {
 
   test("sessionizeTws: a cross-batch in-watermark late event extends " +
       "the open session backwards instead of inverting it") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val c = rocks
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = c.sqlContext
     import graft.ops.Sessionize
+    import c.implicits._
     val stream = MemoryStream[Sessionize.Event]
-    withRocksDbState(spark) {
-      val q = sessionizeTws(stream.toDS(), gapSeconds = 60,
-        watermarkDelay = "120 seconds")
-        .toDF().writeStream.format("memory").queryName("twslate")
-        .outputMode(OutputMode.Append).start()
-      try {
-        val t0 = 1700000000000000L // micros
-        stream.addData(Sessionize.Event(7, t0 + 100000000L, 1))
-        q.processAllAvailable()
-        // batch 2: late (t0+50s, inside the 120s watermark) + t0+115s
-        stream.addData(
-          Sessionize.Event(7, t0 + 50000000L, 2),
-          Sessionize.Event(7, t0 + 115000000L, 3))
-        q.processAllAvailable()
-        assert(spark.table("twslate").isEmpty,
-          "contiguous events must stay ONE open session")
-        // close it on arrival with a far-future same-key event
-        stream.addData(Sessionize.Event(7, t0 + 400000000L, 4))
-        q.processAllAvailable()
-        val closed = spark.table("twslate").collect()
-        assert(closed.length == 1, closed.mkString(";"))
-        val c = closed.head
-        assert(c.getAs[Long]("sessionStartUs") == t0 + 50000000L &&
-          c.getAs[Long]("sessionEndUs") == t0 + 115000000L &&
-          c.getAs[Long]("nEvents") == 3,
-          c.toString)
-      } finally q.stop()
-    }
+    val q = sessionizeTws(stream.toDS(), gapSeconds = 60,
+      watermarkDelay = "120 seconds")
+      .toDF().writeStream.format("memory").queryName("twslate")
+      .outputMode(OutputMode.Append).start()
+    try {
+      val t0 = 1700000000000000L // micros
+      stream.addData(Sessionize.Event(7, t0 + 100000000L, 1))
+      q.processAllAvailable()
+      // batch 2: late (t0+50s, inside the 120s watermark) + t0+115s
+      stream.addData(
+        Sessionize.Event(7, t0 + 50000000L, 2),
+        Sessionize.Event(7, t0 + 115000000L, 3))
+      q.processAllAvailable()
+      assert(c.table("twslate").isEmpty,
+        "contiguous events must stay ONE open session")
+      // close it on arrival with a far-future same-key event
+      stream.addData(Sessionize.Event(7, t0 + 400000000L, 4))
+      q.processAllAvailable()
+      val closed = c.table("twslate").collect()
+      assert(closed.length == 1, closed.mkString(";"))
+      val row = closed.head
+      assert(row.getAs[Long]("sessionStartUs") == t0 + 50000000L &&
+        row.getAs[Long]("sessionEndUs") == t0 + 115000000L &&
+        row.getAs[Long]("nEvents") == 3,
+        row.toString)
+    } finally q.stop()
   }
 
   test("emitted totals are independent of row order within a batch") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def run(data: Seq[Contribution]): Set[Totals] =
-      withRocksDbState(spark) {
-        val stream = MemoryStream[Contribution]
-        val name = s"tws_ord_${System.nanoTime()}"
-        val q = runningTotals(stream.toDS())
-          .toDF().writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append).start()
-        try {
-          stream.addData(data)
-          q.processAllAvailable()
-          spark.table(name).as[Totals].collect().toSet
-        } finally q.stop()
-      }
+    def run(data: Seq[Contribution]): Set[Totals] = {
+      val c = rocks
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = c.sqlContext
+      import c.implicits._
+      val stream = MemoryStream[Contribution]
+      val name = s"tws_ord_${System.nanoTime()}"
+      val q = runningTotals(stream.toDS())
+        .toDF().writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append).start()
+      try {
+        stream.addData(data)
+        q.processAllAvailable()
+        c.table(name).as[Totals].collect().toSet
+      } finally q.stop()
+    }
     val data = Seq(Contribution("x", 1), Contribution("x", 7),
       Contribution("y", -2), Contribution("x", 4))
     assert(run(data) == run(data.reverse))

@@ -1063,21 +1063,23 @@ class DeltaExportSpec extends SparkSpec {
     assert(back.filter("nested.x >= 20").count() == 2L)
     // id-mode partitioned logs also plan as ONE partitioned scan
     assert(!back.queryExecution.executedPlan.toString.contains("Union"))
-    // disabling the fieldId conf AFTER planning must refuse loudly at
-    // execution — Spark would otherwise silently name-match the
-    // physical col-* columns to nothing and return all nulls. A fresh
-    // snapshot DataFrame (readers not yet built; readSnapshot re-sets
-    // the conf, so flip it after) hits the guard on first execution.
-    val back2 = DeltaExport.readSnapshot(spark, path)
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "false")
+    // the id-mode scan matches by field id whatever the session's
+    // fieldId conf says: with it explicitly off, both at planning and
+    // at execution, the rows still come back (Spark's own reader would
+    // name-match the physical col-* columns to nothing: all nulls)
+    val fieldIdKey = "spark.sql.parquet.fieldId.read.enabled"
+    val prevFieldId = spark.conf.getOption(fieldIdKey)
+    spark.conf.set(fieldIdKey, "false")
     try {
-      val eConf = intercept[Exception](back2.collect())
-      assert(eConf.getMessage != null &&
-        eConf.getMessage.contains("fieldId.read.enabled"),
-        s"wanted the loud conf guard, got: ${eConf.getMessage}")
-    } finally
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    assert(back2.filter("p = 'east'").count() == 2L)
+      val back2 = DeltaExport.readSnapshot(spark, path)
+      val got2 = back2.selectExpr("id", "v", "nested.x", "nested.y", "p")
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
+          r.getString(3), r.getString(4))).toSet
+      assert(got2 == got)
+      assert(back2.filter("p = 'east'").count() == 2L)
+      assert(spark.conf.get(fieldIdKey) == "false")
+    } finally prevFieldId.fold(spark.conf.unset(fieldIdKey))(
+      spark.conf.set(fieldIdKey, _))
     // a field missing its columnMapping.id is a malformed id-mode log
     val brokenLogical = StructType(logical.fields.map {
       case f if f.name == "v" =>
